@@ -1223,8 +1223,12 @@ def _build_index_inner(
             raise ValueError(
                 f"index meta mismatch: existing {old} vs requested {meta}"
             )
-    with open(meta_path, "w") as f:
+    # tmp + rename: a crash mid-write must leave the previous meta.json
+    # readable (retention.py and sync.py write it the same way)
+    tmp = meta_path + ".tmp"
+    with open(tmp, "w") as f:
         json.dump(meta, f)
+    os.replace(tmp, meta_path)
 
     # optional access labels: absent -> typed-null column so the indexer
     # sees one stable input schema (MiruActivity.authz is likewise

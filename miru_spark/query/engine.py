@@ -10,35 +10,43 @@ FullText.java:54-97):
 - postings fetch: `postings.filter(term IN query_terms)` -- Parquet
   predicate pushdown on `term` (postings files are written sorted by term,
   so row-group stats prune aggressively); time-range constraints prune at
-  the pid partition level plus an exact per-pid docID interval mask, the
-  analog of miru's buildTimeRangeMask closest-id bounds
-  (MiruBitmaps.java:141, LabTimeIndex.java:191-208)
-- per-partition kernel: `repartition(pid)` + `mapInPandas` (one pandas
-  call per task, looping the pids it owns -- per-group invocation
-  overhead stays O(tasks), not O(pids)) -- decode posting blocks to
-  NumPy, evaluate the boolean tree over sorted docID arrays
-  (and/or/andNot = intersect/union/setdiff -- MiruBitmaps.java:87-123),
-  score BM25 (k1=1.2, b=0.75) vectorized, emit a bounded per-partition
-  top-k (the reference's MinMaxPriorityQueue, FullText.java:129-157)
+  the pid partition level plus an exact per-pid docID interval mask
+  resolved from the pid's 't' time-index rows, the analog of miru's
+  buildTimeRangeMask closest-id bounds (MiruBitmaps.java:141,
+  LabTimeIndex.java:191-208). Indexes must be format >= 2 (they carry
+  those rows); older ones are rejected at engine init.
+- ONE top-k evaluator (`_evaluate`) over composite (pid << 32 | doc_id)
+  ids answers every search on both routes: evaluate the boolean tree
+  over sorted id arrays (and/or/andNot = intersect/union/setdiff --
+  MiruBitmaps.java:87-123), mask boundary-pid time intervals and
+  tombstones, score BM25 (k1=1.2, b=0.75) vectorized, and cut the top-k
+  (the reference's MinMaxPriorityQueue, FullText.java:129-157) or, for
+  the TIME strategy, the newest k. The serving node runs it on its
+  LRU-decoded postings (`_search_local`, zero Spark jobs); the
+  distributed route runs it once per task inside one `mapInPandas`
+  (`_topk_runner`) on the task's pid-co-located posting blocks.
 - global merge: orderBy(score desc, pid asc, doc_id asc).limit(k) --
   Spark's TakeOrderedAndProject is the FullTextAnswerMerger k-way merge
   (FullTextAnswerMerger.java:30-69)
 - winners join back to docmap for display fields (forward-index gather,
   FullText.gatherValues FullText.java:253-280).
+- match-set aggregations (count, waveforms, facets, pairs, stumptown)
+  run the per-pid `_make_kernel` on the distributed route.
 
 **Block-max pruning (exact).** Posting blocks are doc-range aligned across
 terms (blk = doc_id // block_span with one span for the whole index), so
-for a blk range the metadata-only bound
-    ub_total(blk) = sum over scoring terms t of
-                    idf_t * BM25_tf(max_tf_t(blk), min_dl_t(blk))
-dominates every doc's score in that range, and scoring any *subset of blks*
-with the exhaustive kernel is exact for the docs it contains (every posting
-of those docs for every fetched term lives in those blks). Two phases:
-(1) score the highest-ub blks until k docs are found -> threshold theta;
-(2) score all blks with ub_total >= theta and merge. Docs in skipped blks
+for a cell (pid, blk) the metadata-only bound
+    ub_total(cell) = sum over scoring terms t of
+                     idf_t * BM25_tf(max_tf_t(cell), min_dl_t(cell))
+dominates every doc's score in that cell, and scoring any *subset of
+cells* exhaustively is exact for the docs it contains (every posting of
+those docs for every fetched term lives in those cells). Two phases:
+(1) score the highest-ub cells until k docs are found -> threshold theta;
+(2) score all cells with ub_total >= theta and merge. Docs in skipped cells
 are bounded below theta, so the final top-k is rank-identical to the
 exhaustive scorer -- miru's atomized-container skipping
 (LabFieldIndex.multiTxIndex:339-419) upgraded to block-max WAND semantics.
+It engages on both routes past `SearchEngine.LOCAL_BLOCKMAX_MIN_POSTINGS`.
 
 Scores are float64 and term contributions accumulate in sorted term order,
 matching the pure-Python oracle bit-for-bit.
@@ -48,13 +56,14 @@ from __future__ import annotations
 
 import json
 import os
+from typing import NamedTuple
 
 import numpy as np
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from ..codec import decode_grouped_deltas, decode_postings, decode_varint
+from ..codec import decode_grouped_deltas, decode_varint
 from ..index.build import _POSTING_COLS, IndexPaths
 from .featureops import FeatureOpsMixin
 from ..oracle import B, K1, MAX_WILDCARD_EXPANSION, bm25_idf
@@ -66,8 +75,6 @@ from ..queryparse import (
     with_access,
 )
 
-_RESULT_SCHEMA = "pid long, doc_id long, score double"
-
 _AUX_TYPES = {
     "pid": "long", "term": "string", "blk": "long", "n": "int",
     "first_doc": "long", "last_doc": "long", "max_tf": "int",
@@ -75,12 +82,24 @@ _AUX_TYPES = {
     "tfs_bin": "binary", "dls_bin": "binary", "pos_bin": "binary",
     "df": "long",
 }
+_OUT_TYPES = {
+    "pid": "long", "doc_id": "long", "score": "double", "cnt": "long",
+    "term": "string",
+}
+_EMPTY = np.empty(0, dtype=np.int64)
+
+
+class IndexFormatError(ValueError):
+    """The index predates format 2: it has no per-block 't' time-index
+    rows, which time ranges, waveforms and the kernel's boundary-pid
+    bounds all read. Rebuild it with jobs/build_index_job.py."""
 
 
 def _pad_cols(df: DataFrame, cols: list[str], rk: str) -> DataFrame:
     """Align a row source onto the kernel input schema (missing columns
     become typed nulls) and tag it with a row-kind marker: 'p' posting
-    block, 't' time-index blob, 'z' pid marker (match-all)."""
+    block, 't' time-index blob, 'z' pid marker (match-all), 'x' removed
+    docID (unpinned tombstones, id in first_doc)."""
     have = set(df.columns)
     return df.select(
         *[
@@ -349,23 +368,418 @@ def _interp_buckets(
     return [(int(b) * bucket_us, float(v)) for b, v in zip(full, iv)]
 
 
+class _Inputs(NamedTuple):
+    """What the evaluator reads, from one kernel task (`_task_inputs`) or
+    one serving-node query (`SearchEngine._local_inputs`). `post` maps
+    term -> (cids, tfs, dls) over sorted composite ids (filter-only terms
+    alias tfs/dls to cids); `term_pos` maps phrase members to (cids, tfs,
+    positions); `universe` is the sorted match-all id set (None without
+    an "all" node); `bounds` maps boundary pids to their exact [lo, hi)
+    docID interval; `rem` is the sorted composite tombstone set."""
+
+    post: dict
+    term_pos: dict
+    universe: np.ndarray | None
+    bounds: dict
+    rem: np.ndarray | None
+
+
+class _TopK(NamedTuple):
+    """One top-k request as the evaluator sees it. `idf` None means the
+    vocabulary is unpinned and each task derives idf from the `df` column
+    riding its rows. `blockmax` is (block_span, min_postings, min_cells)
+    when block-max may engage; `theta0` a known lower bound on the global
+    k-th score (the driver's theta seed)."""
+
+    tree: tuple
+    expansions: dict
+    scoring_terms: list
+    idf: dict | None
+    avgdl: float
+    k: int
+    strategy: str = "tfidf"
+    blockmax: tuple | None = None
+    theta0: float = 0.0
+
+
+def _t_times(firsts, bins) -> np.ndarray:
+    """docID -> warc_us array of one pid from its 't' time-index rows
+    (per-block varint gap blobs, taken in first_doc order). docIDs are
+    dense and time-ordered per pid, so array position IS the docID."""
+    order = np.argsort(np.asarray(firsts), kind="stable")
+    return np.concatenate(
+        [np.cumsum(decode_varint(bins[i])) for i in order]
+    )
+
+
+def _t_interval(times: np.ndarray, t0_us: int, t1_us: int) -> tuple:
+    """Exact [lo, hi) docID interval of [t0_us, t1_us] over a pid's time
+    array (LabTimeIndex getClosestId, LabTimeIndex.java:191-208)."""
+    return (
+        int(np.searchsorted(times, t0_us, "left")),
+        int(np.searchsorted(times, t1_us, "right")),
+    )
+
+
+def _decode_blocks(
+    terms, pids, ns, ids_bins, tfs_bins, third_bins, positions=False
+) -> dict:
+    """The one posting-block decoder: rows sorted by (term, pid, blk) ->
+    {term: (cids, tfs, third)} with absolute composite (pid << 32 |
+    doc_id) ids, ascending. `third` is the doc-length array, or with
+    `positions` the flat per-occurrence token positions of the pos_bin
+    blobs (the triple _eval_phrase consumes). ONE varint pass per term
+    over its concatenated blobs, then a vectorized per-block rebase (each
+    block's first gap is absolute within its pid). Terms without tf blobs
+    (not fetched, or nulled before the exchange because they never score)
+    alias tfs and third to the id array."""
+    out: dict = {}
+    if not len(terms):
+        return out
+    bnd = np.flatnonzero(terms[1:] != terms[:-1]) + 1
+    starts = np.concatenate(([0], bnd, [len(terms)])).tolist()
+    for s, e in zip(starts[:-1], starts[1:]):
+        gaps = decode_varint(b"".join(ids_bins[s:e]))
+        acc = np.cumsum(gaps)
+        row_n = ns[s:e]
+        rs = np.zeros(e - s, dtype=np.int64)
+        np.cumsum(row_n[:-1], out=rs[1:])
+        base = acc[rs] - gaps[rs] - (pids[s:e] << 32)
+        cids = acc - np.repeat(base, row_n)
+        if tfs_bins is None or tfs_bins[s] is None:
+            out[terms[s]] = (cids, cids, cids)
+            continue
+        tfs = decode_varint(b"".join(tfs_bins[s:e]))
+        blob = b"".join(third_bins[s:e])
+        out[terms[s]] = (
+            cids,
+            tfs,
+            decode_grouped_deltas(blob, tfs) if positions
+            else decode_varint(blob),
+        )
+    return out
+
+
+def _universe(pids, pid_counts: dict, bounds: dict) -> np.ndarray:
+    """Match-all universe: every docID of `pids` as sorted composite ids,
+    boundary pids clipped to their [lo, hi) interval."""
+    spans = []
+    for p in sorted(int(p) for p in pids):
+        n = int(pid_counts.get(p, 0))
+        lo, hi = bounds.get(p, (0, n))
+        lo, hi = max(lo, 0), min(hi, n)
+        if hi > lo:
+            spans.append((p << 32) + np.arange(lo, hi, dtype=np.int64))
+    return np.concatenate(spans) if spans else _EMPTY
+
+
+def _match_set(tree, expansions: dict, inp: _Inputs) -> np.ndarray:
+    """Exact sorted match set: tree evaluation over the composite ids,
+    then the boundary-pid time mask (interior pids lie wholly inside the
+    range) and the tombstone mask (the query-side andNot(removalIndex) of
+    MiruIndexer.remove)."""
+    matches = _eval_tree(
+        tree,
+        {t: v[0] for t, v in inp.post.items()},
+        expansions,
+        _EMPTY if inp.universe is None else inp.universe,
+        inp.term_pos,
+    )
+    for p, (lo, hi) in inp.bounds.items():
+        if not matches.size:
+            break
+        base = int(p) << 32
+        s, kl, kh, e = np.searchsorted(
+            matches, [base, base + lo, base + hi, base + (1 << 32)]
+        )
+        matches = np.concatenate((matches[:s], matches[kl:kh], matches[e:]))
+    rem = inp.rem
+    if rem is not None and rem.size and matches.size:
+        pos = np.minimum(np.searchsorted(rem, matches), rem.size - 1)
+        matches = matches[rem[pos] != matches]
+    return matches
+
+
+def _blockmax(post, scorer, scoring, idf, avgdl, k, span, min_cells,
+              theta0=0.0):
+    """Exact two-phase block-max over composite-id cells (pid, doc_id //
+    span); see the module docstring for the admissibility argument.
+    Cells whose bound falls below `theta0` are dropped before phase 1.
+    Phase 1 scores the highest-bound cells until k docs survive the masks
+    -> theta (a lower bound on the true k-th score, since subset scores
+    are exact); phase 2 scores every cell whose bound reaches theta.
+    Cells carrying only filter-term postings ride with bound 0 so
+    zero-score matches stay reachable. Returns (matches, scores, stats);
+    stats ({"cells_total", "cells_scored"}) is None when there are fewer
+    than `min_cells` cells and the scan ran exhaustive."""
+    term_cells: dict = {}
+    key_parts: list = []
+    ub_parts: list = []
+    for t, (c, f, d) in post.items():
+        if c.size == 0:
+            continue
+        cells = ((c >> 32) << 32) | ((c & 0xFFFFFFFF) // span)
+        term_cells[t] = cells
+        starts = np.concatenate(
+            ([0], np.flatnonzero(cells[1:] != cells[:-1]) + 1)
+        )
+        idf_t = idf.get(t, 0.0)
+        if t in scoring and idf_t > 0.0:
+            ub = idf_t * _bm25_tf_part(
+                np.maximum.reduceat(f, starts).astype(np.float64),
+                np.minimum.reduceat(d, starts).astype(np.float64),
+                avgdl,
+            )
+        else:
+            ub = np.zeros(starts.size, dtype=np.float64)
+        key_parts.append(cells[starts])
+        ub_parts.append(ub)
+    if not key_parts:
+        return (*scorer(post), None)
+    uq, inv = np.unique(np.concatenate(key_parts), return_inverse=True)
+    if uq.size < min_cells:
+        return (*scorer(post), None)
+    ub_sum = np.zeros(uq.size, dtype=np.float64)
+    np.add.at(ub_sum, inv, np.concatenate(ub_parts))
+    live = np.flatnonzero(ub_sum >= theta0)
+    desc = live[np.argsort(-ub_sum[live], kind="stable")]
+
+    def slice_to(chosen):  # chosen: sorted unique cell keys
+        sub = {}
+        for t, cells in term_cells.items():
+            pos = np.minimum(
+                np.searchsorted(chosen, cells), chosen.size - 1
+            )
+            mask = chosen[pos] == cells
+            if mask.any():
+                c, f, d = post[t]
+                cm = c[mask]
+                sub[t] = (
+                    cm,
+                    cm if f is c else f[mask],
+                    cm if d is c else d[mask],
+                )
+        return sub
+
+    matches = _EMPTY
+    scores = np.empty(0, dtype=np.float64)
+    m = min(4, desc.size)
+    while m:
+        matches, scores = scorer(slice_to(np.sort(uq[desc[:m]])))
+        if matches.size >= k or m >= desc.size:
+            break
+        m = min(m * 4, desc.size)
+    scored = m
+    if matches.size >= k:
+        theta = max(-np.partition(-scores, k - 1)[k - 1], theta0)
+        full = np.unique(np.concatenate((uq[ub_sum >= theta], uq[desc[:m]])))
+        if full.size > m:
+            matches, scores = scorer(slice_to(full))
+        scored = full.size
+    return matches, scores, {
+        "cells_total": int(uq.size),
+        "cells_scored": int(scored),
+    }
+
+
+def _evaluate(q: _TopK, inp: _Inputs):
+    """THE top-k evaluator of both routes: match set (`_match_set`),
+    sorted-term float64 BM25 accumulation, then the k best by (score
+    desc, pid, doc_id) -- or for the TIME strategy the k newest, since
+    ascending composite ids ARE global time order (pids are time buckets,
+    docIDs are minted in warc order; FullText.collectTime:222-251).
+    Block-max engages for score-ranked, non-phrase, non-match-all
+    requests whose postings reach the `q.blockmax` gate; it is exact, so
+    the answer never depends on it. Returns (cids, scores, block-max cell
+    stats or None), best first; k <= 0 keeps every match."""
+    idf = q.idf or {}
+
+    def scorer(post):
+        matches = _match_set(q.tree, q.expansions, inp._replace(post=post))
+        scores = np.zeros(matches.size, dtype=np.float64)
+        if q.strategy != "time" and matches.size:  # TIME discards scores
+            for t in q.scoring_terms:  # sorted order fixes float summation
+                e = post.get(t)
+                if e is not None and e[0].size:
+                    _accumulate_term(
+                        scores, matches, e[0], e[1], e[2],
+                        idf.get(t, 0.0), q.avgdl,
+                    )
+        return matches, scores
+
+    bm = q.blockmax
+    stats = None
+    if (
+        bm is not None
+        and q.k > 0
+        and q.strategy != "time"
+        and inp.universe is None
+        # phrase position triples cannot be sliced by cell
+        and not inp.term_pos
+        and q.scoring_terms
+        and sum(v[0].size for v in inp.post.values()) >= bm[1]
+    ):
+        matches, scores, stats = _blockmax(
+            inp.post, scorer, set(q.scoring_terms), idf, q.avgdl, q.k,
+            bm[0], bm[2], q.theta0,
+        )
+    else:
+        matches, scores = scorer(inp.post)
+    if q.strategy == "time":
+        order = np.arange(matches.size - 1, -1, -1)
+    else:
+        order = np.lexsort((matches, -scores))
+    if q.k > 0:
+        order = order[: q.k]
+    return matches[order], scores[order], stats
+
+
+def _task_inputs(pdf, pid_counts: dict, time_spec, removed_comp):
+    """Evaluator inputs from a kernel task's rows, the input step both
+    kernels share: 'p' posting blocks, 't' time-index rows, 'z' match-all
+    pid markers, 'x' unpinned tombstones. Boundary pids of `time_spec`
+    (t0_us, t1_us, pid_lo, pid_hi) resolve their exact [lo, hi) from
+    their 't' rows, and posting blocks whose docID span misses it are
+    dropped BEFORE the decode -- considerIfLastIdGreaterThanN at block
+    granularity (the reference skips whole terms whose lastId <= N,
+    LabFieldIndex.multiTxIndex:339-419; blocks are delta-encoded per
+    block, so dropping one is decode-safe). Admissible for every node
+    kind: matches are bound-masked anyway, and a dropped negation block
+    could only remove docs the bound drops. Returns (_Inputs, {term: df}
+    from a riding `df` column)."""
+    import pandas as pd
+
+    rk = pdf["rk"].to_numpy()
+    p = pdf[rk == "p"]
+    bounds: dict = {}
+    if time_spec is not None:
+        t0_us, t1_us, pid_lo, pid_hi = time_spec
+        tr = pdf[rk == "t"]
+        tpid = tr["pid"].to_numpy()
+        for pid in {int(pid_lo), int(pid_hi)}:
+            sel = tpid == pid
+            if sel.any():
+                bounds[pid] = _t_interval(
+                    _t_times(
+                        tr["first_doc"].to_numpy()[sel],
+                        tr["ids_bin"].to_numpy()[sel],
+                    ),
+                    t0_us, t1_us,
+                )
+    if bounds and len(p):
+        ppid = p["pid"].to_numpy()
+        first = p["first_doc"].to_numpy()
+        last = p["last_doc"].to_numpy()
+        keep = np.ones(len(p), dtype=bool)
+        for pid, (lo, hi) in bounds.items():
+            inb = ppid == pid
+            keep[inb] = (last[inb] >= lo) & (first[inb] < hi)
+        if not keep.all():
+            p = p[keep]
+    p = p.sort_values(["term", "pid", "blk"], kind="stable")
+    terms = p["term"].to_numpy()
+    pids = p["pid"].to_numpy().astype(np.int64)
+    ns = p["n"].to_numpy().astype(np.int64)
+    ids_bins = p["ids_bin"].to_numpy()
+    tfs_bins = p["tfs_bin"].to_numpy()
+    post = _decode_blocks(
+        terms, pids, ns, ids_bins, tfs_bins, p["dls_bin"].to_numpy()
+    )
+    term_pos: dict = {}
+    if "pos_bin" in p.columns:
+        # phrase members: positions ride only their rows (nulled before
+        # the exchange for every other term)
+        ph = p["pos_bin"].notna().to_numpy()
+        if ph.any():
+            term_pos = _decode_blocks(
+                terms[ph], pids[ph], ns[ph], ids_bins[ph], tfs_bins[ph],
+                p["pos_bin"].to_numpy()[ph], positions=True,
+            )
+    dfmap: dict = {}
+    if "df" in p.columns:
+        d = p.drop_duplicates("term")
+        dfmap = {
+            t: int(v) for t, v in zip(d["term"], d["df"]) if not pd.isna(v)
+        }
+    zp = pdf["pid"].to_numpy()[rk == "z"]
+    universe = (
+        _universe(np.unique(zp), pid_counts, bounds) if zp.size else None
+    )
+    xr = pdf[rk == "x"]
+    rem = removed_comp
+    if len(xr):
+        rem = np.unique(
+            (xr["pid"].to_numpy().astype(np.int64) << 32)
+            + xr["first_doc"].to_numpy().astype(np.int64)
+        )
+    return _Inputs(post, term_pos, universe, bounds, rem), dfmap
+
+
+def _topk_runner(plans: dict, n_docs: int, pid_counts: dict, time_spec,
+                 removed_comp):
+    """mapInPandas body of every distributed top-k search: decode a
+    task's rows ONCE into composite ids (`_task_inputs`) and run ONE
+    `_evaluate` per query over all of the task's pids -- O(terms) NumPy
+    calls per task, not O(pids x terms). The task's k best rows are
+    exactly its contribution to the global merge. `plans` maps qid ->
+    _TopK; a batch (`search_many`) tags rows with a `qid` column and is
+    grouped by it, a single search is plan 0."""
+    import pandas as pd
+
+    def run(batches):
+        dfs = [b for b in batches if len(b)]
+        if not dfs:
+            return
+        pdf = pd.concat(dfs, ignore_index=True)
+        batched = "qid" in pdf.columns
+        groups = pdf.groupby("qid", sort=False) if batched else [(0, pdf)]
+        for qid, grp in groups:
+            q = plans[int(qid)]
+            inp, dfmap = _task_inputs(grp, pid_counts, time_spec,
+                                      removed_comp)
+            if q.idf is None:
+                q = q._replace(
+                    idf={t: bm25_idf(n_docs, d) for t, d in dfmap.items()}
+                )
+            cids, scores, _stats = _evaluate(q, inp)
+            if not cids.size:
+                continue
+            out = pd.DataFrame(
+                {
+                    "pid": cids >> 32,
+                    "doc_id": cids & 0xFFFFFFFF,
+                    "score": scores,
+                }
+            )
+            if batched:
+                out.insert(0, "qid", int(qid))
+            yield out
+
+    return run
+
+
+def _kernel_columns(agg: str | None, facet_prefixes) -> list[str]:
+    """Declared output columns of a kernel frame: `kernel_frame`'s
+    out_schema and every frame `_make_kernel` returns, empty ones too."""
+    cols = ["pid", "doc_id", "score"]
+    if agg in ("aggregate", "waveforms"):
+        cols.append("cnt")
+    # streamed facet mode emits the composed value term itself (metrics
+    # excepted: its values decode in-kernel and only per-bucket sums
+    # leave the task)
+    if facet_prefixes and agg != "metrics":
+        cols.append("term")
+    return cols
+
+
 def _make_kernel(
     tree,
-    scoring_terms: list[str],
-    n_docs: int,
-    avgdl: float,
     k: int,
     pid_counts: dict,
     expansions: dict,
-    time_bounds: dict | None,
-    use_blockmax: bool,
-    idf_map: dict | None = None,
     time_spec: tuple | None = None,
-    removed_map: dict | None = None,
-    theta0: float = 0.0,
-    counter: dict | None = None,
-    strategy: str = "tfidf",
-    agg: str | None = None,
+    removed_comp: np.ndarray | None = None,
+    agg: str = "count",
     bucket_us: int = 0,
     bucket_origin_us: int = 0,
     bucket_count: int = 0,
@@ -376,8 +790,23 @@ def _make_kernel(
     tuple_specs: list | None = None,
     facet_prefixes: list | None = None,
 ):
-    """Build the per-partition applyInPandas kernel (closure ships to
-    executors with the task -- all members are small).
+    """Build the per-pid match-set aggregation kernel (closure ships to
+    executors with the task -- all members are small). Top-k searches
+    never come here: they run `_topk_runner`. The match step is the
+    shared one (`_task_inputs` + `_match_set`); `agg` picks the reducer,
+    with no scoring and no heap:
+
+    - "count": one (pid, 0, match_count) row per pid;
+    - "waveform": one (pid, bucket_index, count) row per epoch-aligned
+      `bucket_us` bucket, timestamps from the pid's own 't' rows in the
+      same task -- the analytics-plugin waveform (Analytics.java:164-183
+      ANDs the constrained filter with per-bucket time bitmaps; here
+      matched docIDs index the pid's time array and histogram);
+    - "waveforms", "distincts", "metrics", "aggregate": per facet value
+      of `facet_terms` (or of `facet_prefixes`, below) bucket counts,
+      match counts, numeric per-bucket sums, newest doc + count;
+    - "pairs": feature-tuple co-occurrence counts (`tuple_specs`);
+    - "stumptown": bucket counts (pid=-1 rows) plus the pid's newest k.
 
     `facet_prefixes` switches the distincts/aggregate/waveforms/metrics
     facet modes from a driver-enumerated `facet_terms` LIST to streamed
@@ -388,31 +817,11 @@ def _make_kernel(
     on the driver -- the Spark rendering of Distincts.gatherDirect
     streaming the whole term range (Distincts.java:69-140). At 100 TB a
     `user`/`guid` facet has millions of values; this path's driver
-    footprint stays O(result), not O(value space).
-
-    `agg` switches the kernel from top-k retrieval to match-set
-    aggregation (no scoring, no heap): "count" emits one
-    (pid, 0, match_count) row per pid; "waveform" emits one
-    (pid, bucket_index, count) row per epoch-aligned `bucket_us` bucket,
-    timestamps resolved from the pid's own 't' time-index rows inside
-    the same task -- the analytics-plugin waveform (Analytics.java
-    :164-183 ANDs the constrained filter with per-bucket time bitmaps;
-    here matched docIDs index the pid's time array and histogram).
-
-    idf arrives one of two ways: `idf_map` computed driver-side from the
-    pinned term dictionary (the normal, zero-extra-job path), or -- when
-    the vocabulary is too large to pin -- a `df` column broadcast-joined
-    onto the posting blocks.
-
-    Time bounds likewise: `time_spec=(t0_us, t1_us, pid_lo, pid_hi)` makes
-    the kernel resolve each boundary pid's exact [lo, hi) docID interval
-    from its 't' time-index rows (format-2 indexes; LabTimeIndex
-    getClosestId, LabTimeIndex.java:191-208) inside the same job, while
-    `time_bounds` is the legacy driver-collected dict for format-1."""
+    footprint stays O(result), not O(value space)."""
     import pandas as pd
 
-    has_all = "all" in _tree_tags(tree)
     fpfx = tuple(facet_prefixes) if facet_prefixes else None
+    cols = _kernel_columns(agg, facet_prefixes)
 
     def facet_keys(ids_out: dict) -> list:
         """Streamed facet enumeration: THIS task's facet terms are the
@@ -432,696 +841,244 @@ def _make_kernel(
             return np.unique(rel // bucket_us, return_counts=True)
         return np.unique(warc_vals // bucket_us, return_counts=True)
 
-    def resolve_bounds(pid: int, trows):
-        """Per-pid [lo, hi) docID interval, or None when unbounded."""
-        n = int(pid_counts.get(pid, 0))
-        if time_bounds is not None:
-            return time_bounds.get(pid, (0, n))
-        if time_spec is None:
-            return None
-        t0_us, t1_us, pid_lo, pid_hi = time_spec
-        if pid_lo < pid < pid_hi:
-            return (0, n)  # interior pid: whole partition inside the range
-        if trows is None or not len(trows):
-            return (0, n)
-        tr = trows.sort_values("first_doc")
-        warc = np.concatenate(
-            [np.cumsum(decode_varint(b)) for b in tr["ids_bin"]]
-        )
-        return (
-            int(np.searchsorted(warc, t0_us, "left")),
-            int(np.searchsorted(warc, t1_us, "right")),
-        )
-
-    def decode_terms(rows: "pd.DataFrame"):
-        term_ids, term_tfs, term_dls = {}, {}, {}
-        term_pos: dict = {}
-        has_pos = "pos_bin" in rows.columns
-        for term, grp in rows.groupby("term", sort=True):
-            ids = np.concatenate(
-                [decode_postings(b) for b in grp["ids_bin"]]
-            ) if len(grp) else np.empty(0, dtype=np.int64)
-            term_ids[term] = ids
-            if len(grp) and grp["tfs_bin"].iloc[0] is None:
-                # filter-only term: tf/dl blobs were nulled before the
-                # exchange and are never read (non-scoring)
-                term_tfs[term] = term_dls[term] = ids
-                continue
-            term_tfs[term] = np.concatenate(
-                [decode_varint(b) for b in grp["tfs_bin"]]
-            ) if len(grp) else ids
-            term_dls[term] = np.concatenate(
-                [decode_varint(b) for b in grp["dls_bin"]]
-            ) if len(grp) else ids
-            if has_pos and len(grp) and grp["pos_bin"].iloc[0] is not None:
-                # phrase member: per-occurrence positions ride along
-                # (nulled before the exchange for every other term)
-                term_pos[term] = (
-                    ids,
-                    term_tfs[term],
-                    decode_grouped_deltas(
-                        b"".join(grp["pos_bin"]), term_tfs[term]
-                    ),
-                )
-        return term_ids, term_tfs, term_dls, term_pos
-
-    def score_subset(
-        pid: int, rows: "pd.DataFrame", idf: dict, bounds, rem=None,
-        ids_out: dict | None = None,
-    ):
-        """Exact match+score over a doc-range-aligned blk subset.
-        Returns (doc_ids, scores) sorted by doc_id. `rem` is the pid's
-        sorted removed-docID array (tombstone mask, the query-side
-        andNot(removalIndex) of MiruIndexer.remove). `ids_out` (distincts
-        mode) receives the decoded per-term docID arrays."""
-        if bounds is not None and len(rows):
-            lo, hi = bounds
-            if lo > 0 or hi < int(pid_counts.get(pid, 1 << 62)):
-                # considerIfLastIdGreaterThanN, block-granular: a block
-                # whose docID span misses [lo, hi) cannot contribute a
-                # bounded match, a bounded score, or a bounded facet
-                # hit -- drop it BEFORE the varint decode (the
-                # reference skips whole terms whose lastId <= N during
-                # multi-term walks, LabFieldIndex.multiTxIndex:339-419;
-                # blocks are delta-encoded per block, so per-block
-                # dropping is decode-safe). Admissible for every node
-                # kind: matches are bound-filtered before scoring, and
-                # a dropped negation block could only remove docs the
-                # bound drops anyway.
-                keep = (rows["last_doc"].to_numpy() >= lo) & (
-                    rows["first_doc"].to_numpy() < hi
-                )
-                if not keep.all():
-                    rows = rows[keep]
-        term_ids, term_tfs, term_dls, term_pos = decode_terms(rows)
-        if ids_out is not None:
-            ids_out.update(term_ids)
-        n_docs_pid = int(pid_counts.get(pid, 0))
-        if has_all:
-            if bounds is not None:
-                lo, hi = bounds
-                universe = np.arange(
-                    max(lo, 0), min(hi, n_docs_pid), dtype=np.int64
-                )
-            else:
-                universe = np.arange(n_docs_pid, dtype=np.int64)
-        else:
-            universe = np.empty(0, dtype=np.int64)
-        matches = _eval_tree(tree, term_ids, expansions, universe, term_pos)
-        if bounds is not None and matches.size:
-            lo, hi = bounds
-            matches = matches[(matches >= lo) & (matches < hi)]
-        if rem is not None and rem.size and matches.size:
-            pos = np.minimum(
-                np.searchsorted(rem, matches), rem.size - 1
-            )
-            matches = matches[rem[pos] != matches]
-        if matches.size == 0:
-            z = np.empty(0, dtype=np.int64)
-            return z, np.empty(0, dtype=np.float64)
-        scores = np.zeros(matches.size, dtype=np.float64)
-        if strategy != "time":  # TIME discards scores: skip the loop
-            for t in scoring_terms:  # sorted order fixes float summation
-                ids = term_ids.get(t)
-                if ids is None or ids.size == 0:
-                    continue
-                _accumulate_term(
-                    scores, matches, ids, term_tfs[t], term_dls[t],
-                    idf[t], avgdl,
-                )
-        return matches, scores
-
-    def topk_of(ids: np.ndarray, scores: np.ndarray):
-        if strategy == "time":
-            # TIME strategy: newest-k = largest docIDs (time-ordered ids,
-            # FullText.collectTime:222-251 descending iterator)
-            order = np.argsort(-ids)
-        else:
-            order = np.lexsort((ids, -scores))
-        if k > 0:
-            order = order[:k]
-        return ids[order], scores[order]
-
     def kernel(pdf: "pd.DataFrame") -> "pd.DataFrame":
-        if pdf.empty:
-            return pd.DataFrame(columns=["pid", "doc_id", "score"])
+        empty = pd.DataFrame(columns=cols)
         pid = int(pdf["pid"].iloc[0])
-        trows = None
-        rem = removed_map.get(pid) if removed_map is not None else None
-        if "rk" in pdf.columns:
-            rk = pdf["rk"].to_numpy()
-            trows = pdf[rk == "t"]
-            xrows = pdf[rk == "x"]  # unpinned tombstones ride along
-            if len(xrows):
-                rem = np.unique(
-                    xrows["first_doc"].to_numpy().astype(np.int64)
+        inp, _df = _task_inputs(pdf, pid_counts, time_spec, removed_comp)
+        base = np.int64(pid) << 32
+        ids = _match_set(tree, expansions, inp) - base  # this pid's docIDs
+        if ids.size == 0:
+            return empty
+        # decoded per-term docIDs (facet modes intersect them with ids)
+        ids_out = (
+            {t: v[0] - base for t, v in inp.post.items()}
+            if agg in ("distincts", "metrics", "aggregate", "waveforms",
+                       "pairs")
+            else {}
+        )
+        warc = None
+        if agg in ("waveform", "metrics", "waveforms", "stumptown"):
+            tr = pdf[pdf["rk"].to_numpy() == "t"]
+            if len(tr):
+                warc = _t_times(
+                    tr["first_doc"].to_numpy(), tr["ids_bin"].to_numpy()
                 )
-            pdf = pdf[rk == "p"]  # 'z' marker rows carry no postings
-        bounds = resolve_bounds(pid, trows)
-        if pdf.empty and not has_all:
-            return pd.DataFrame(columns=["pid", "doc_id", "score"])
-        pdf = pdf.sort_values(["term", "blk"], kind="stable")
-        if idf_map is not None:
-            idf = idf_map
-        else:
-            idf = {
-                t: bm25_idf(n_docs, int(d))
-                for t, d in zip(pdf["term"], pdf["df"])
-                if t is not None and not pd.isna(d)
+            elif agg != "stumptown":
+                return empty
+        if agg == "aggregate":
+            # stream-page gather: per facet value, this pid's newest
+            # matching doc (max docID -- docIDs are time-ordered) and
+            # its match count (AggregateCounts.java distinct-latest
+            # + count); one row per present value leaves the task
+            o_idx, o_doc, o_cnt = [], [], []
+            o_term: list = []
+            fts = (
+                facet_keys(ids_out) if fpfx is not None
+                else (facet_terms or [])
+            )
+            for i, t in enumerate(fts):
+                c = ids_out.get(t)
+                if c is None or not c.size:
+                    continue
+                pos = np.minimum(np.searchsorted(ids, c), ids.size - 1)
+                inter = c[ids[pos] == c]
+                if inter.size:
+                    o_idx.append(float(i))
+                    o_doc.append(int(inter[-1]))
+                    o_cnt.append(int(inter.size))
+                    o_term.append(t)
+            out = {
+                "pid": pid,
+                "doc_id": np.array(o_doc, dtype=np.int64),
+                "score": np.array(o_idx, dtype=np.float64),
+                "cnt": np.array(o_cnt, dtype=np.int64),
             }
-
-        if agg is not None:
-            ids_out: dict | None = (
-                {}
-                if agg in ("distincts", "metrics", "aggregate",
-                           "waveforms", "pairs")
-                else None
-            )
-            ids, _ = score_subset(
-                pid, pdf, idf, bounds, rem, ids_out=ids_out
-            )
-            if agg == "aggregate":
-                # stream-page gather: per facet value, this pid's newest
-                # matching doc (max docID -- docIDs are time-ordered) and
-                # its match count (AggregateCounts.java distinct-latest
-                # + count); one row per present value leaves the task
-                o_idx, o_doc, o_cnt = [], [], []
-                o_term: list = []
-                fts = (
-                    facet_keys(ids_out) if fpfx is not None
-                    else (facet_terms or [])
-                )
-                for i, t in enumerate(fts):
-                    c = ids_out.get(t)
-                    if c is None or not c.size or not ids.size:
-                        continue
-                    pos = np.minimum(
-                        np.searchsorted(ids, c), ids.size - 1
-                    )
-                    inter = c[ids[pos] == c]
-                    if inter.size:
-                        o_idx.append(float(i))
-                        o_doc.append(int(inter[-1]))
-                        o_cnt.append(int(inter.size))
-                        o_term.append(t)
-                out = {
-                    "pid": pid,
-                    "doc_id": np.array(o_doc, dtype=np.int64),
-                    "score": np.array(o_idx, dtype=np.float64),
-                    "cnt": np.array(o_cnt, dtype=np.int64),
-                }
-                if fpfx is not None:
-                    out["score"] = np.zeros(
-                        len(o_term), dtype=np.float64
-                    )
-                    out["term"] = o_term
-                return pd.DataFrame(out)
-            if agg == "pairs":
-                # feature-tuple doc-co-occurrence counts over the match
-                # set -- the counting core of gatherFeatures
-                # (MiruAggregateUtil.gatherFeatures:77-291: per answer
-                # activity, stream the feature fields' terms and count
-                # each observed combination). Only (packed tuple, count)
-                # rows leave the task; the cross product is per-DOC
-                # (multi-valued fields expand), never across docs.
-                # `tuple_specs` batches SEVERAL features into this one
-                # pass (strut's catwalk features): each spec owns a
-                # disjoint int64 key range via its offset, so every
-                # feature's counts ride the same exchange.
-                if tuple_specs is not None:
-                    specs = tuple_specs
-                else:
-                    groups = [facet_terms or [], facet_terms2 or []]
-                    if facet_terms3:
-                        groups.append(facet_terms3)
-                    specs = [(0, groups)]
-                all_k, all_c = [], []
-                for off, groups in specs:
-                    keys, counts = _tuple_counts(ids, ids_out, groups)
-                    if keys.size:
-                        all_k.append(keys + off)
-                        all_c.append(counts)
-                z = np.empty(0, dtype=np.int64)
-                return pd.DataFrame(
-                    {
-                        "pid": pid,
-                        "doc_id": np.concatenate(all_k) if all_k else z,
-                        "score": (
-                            np.concatenate(all_c) if all_c else z
-                        ).astype(np.float64),
-                    }
-                )
-            if agg == "waveforms":
-                # per-facet-value waveforms in ONE pass (trending's
-                # batched shape: TrendingInjectable computes an
-                # analytics waveform per distinct term) -- emits
-                # (pid, bucket, value_idx, count) rows
-                if trows is None or not len(trows) or ids.size == 0:
-                    return pd.DataFrame(
-                        columns=["pid", "doc_id", "score", "cnt"]
-                    )
-                tr = trows.sort_values("first_doc")
-                warc = np.concatenate(
-                    [np.cumsum(decode_varint(b)) for b in tr["ids_bin"]]
-                )
-                fts = (
-                    facet_keys(ids_out) if fpfx is not None
-                    else (facet_terms or [])
-                )
-                o_b, o_v, o_c = [], [], []
-                o_t: list = []
-                for i, t in enumerate(fts):
-                    c = ids_out.get(t)
-                    if c is None or not c.size:
-                        continue
-                    pos = np.minimum(
-                        np.searchsorted(ids, c), ids.size - 1
-                    )
-                    inter = c[ids[pos] == c]
-                    if not inter.size:
-                        continue
-                    ub, cnt = bucket_of(warc[inter])
-                    o_b.append(ub)
-                    o_v.append(np.full(ub.size, i, dtype=np.int64))
-                    o_c.append(cnt)
-                    o_t.extend([t] * ub.size)
-                if not o_b:
-                    return pd.DataFrame(
-                        columns=["pid", "doc_id", "score", "cnt"]
-                    )
-                out = {
-                    "pid": pid,
-                    "doc_id": np.concatenate(o_b),
-                    "score": np.concatenate(o_v).astype(np.float64),
-                    "cnt": np.concatenate(o_c).astype(np.int64),
-                }
-                if fpfx is not None:
-                    out["score"] = np.zeros(
-                        len(o_t), dtype=np.float64
-                    )
-                    out["term"] = o_t
-                return pd.DataFrame(out)
-            if agg == "metrics":
-                # per-bucket SUM of a numeric field over the match set
-                # (Metrics.metricingSum, Metrics.java:82-98: sum over
-                # bit-slice bitmaps of multiplier x boundedCardinality;
-                # here the decomposition is per value-term: sum over
-                # composed numeric terms of value x |match AND postings|)
-                if trows is None or not len(trows) or ids.size == 0:
-                    return pd.DataFrame(
-                        columns=["pid", "doc_id", "score"]
-                    )
-                tr = trows.sort_values("first_doc")
-                warc = np.concatenate(
-                    [np.cumsum(decode_varint(b)) for b in tr["ids_bin"]]
-                )
-                acc: dict = {}
-                if fpfx is not None:
-                    # streamed numeric facet: the value is decodable
-                    # from the composed term itself (order-preserving
-                    # encoding, fields.encode_num) -- no driver list
-                    from ..fields import FIELD_SEP, decode_num
-
-                    fts = facet_keys(ids_out)
-                    fvs = [
-                        float(decode_num(t.split(FIELD_SEP, 1)[1]))
-                        for t in fts
-                    ]
-                else:
-                    fts, fvs = facet_terms or [], facet_values or []
-                for t, v in zip(fts, fvs):
-                    c = ids_out.get(t)
-                    if c is None or not c.size:
-                        continue
-                    pos = np.minimum(
-                        np.searchsorted(ids, c), ids.size - 1
-                    )
-                    inter = c[ids[pos] == c]
-                    if not inter.size:
-                        continue
-                    ub, cnt = bucket_of(warc[inter])
-                    for b, n in zip(ub, cnt):
-                        acc[int(b)] = acc.get(int(b), 0.0) + v * int(n)
-                return pd.DataFrame(
-                    {
-                        "pid": pid,
-                        "doc_id": np.array(
-                            sorted(acc), dtype=np.int64
-                        ),
-                        "score": np.array(
-                            [acc[b] for b in sorted(acc)],
-                            dtype=np.float64,
-                        ),
-                    }
-                )
-            if agg == "distincts":
-                # |match AND facet-term postings| per facet value --
-                # the distincts gatherer (DistinctsQuery filter +
-                # gatherDistinctsForField) as per-pid intersection
-                # counts; only (value_idx, count) rows leave the task
-                out_idx, out_cnt = [], []
-                out_t: list = []
-                fts = (
-                    facet_keys(ids_out) if fpfx is not None
-                    else (facet_terms or [])
-                )
-                for i, t in enumerate(fts):
-                    c = ids_out.get(t)
-                    if c is None or not c.size or not ids.size:
-                        continue
-                    pos = np.minimum(
-                        np.searchsorted(ids, c), ids.size - 1
-                    )
-                    n = int((ids[pos] == c).sum())
-                    if n:
-                        out_idx.append(i)
-                        out_cnt.append(float(n))
-                        out_t.append(t)
-                out = {
-                    "pid": pid,
-                    "doc_id": np.array(out_idx, dtype=np.int64),
-                    "score": np.array(out_cnt, dtype=np.float64),
-                }
-                if fpfx is not None:
-                    out["doc_id"] = np.zeros(
-                        len(out_t), dtype=np.int64
-                    )
-                    out["term"] = out_t
-                return pd.DataFrame(out)
-            if agg == "stumptown":
-                # ONE pass over this pid's match set yields BOTH outputs
-                # (Stumptown.stumptowning, Stumptown.java:37-73: newest-k
-                # activities off the answer's descending iterator + the
-                # same answer's boundedCardinalities waveform): bucket
-                # rows tagged pid=-1, newest-k candidate rows with the
-                # real pid (score 0, TIME semantics -- docIDs are
-                # time-ordered within a pid)
-                if ids.size == 0:
-                    return pd.DataFrame(
-                        columns=["pid", "doc_id", "score"]
-                    )
-                out_pid: list = []
-                out_doc: list = []
-                out_sc: list = []
-                if trows is not None and len(trows):
-                    tr = trows.sort_values("first_doc")
-                    warc = np.concatenate(
-                        [np.cumsum(decode_varint(b)) for b in tr["ids_bin"]]
-                    )
-                    b_idx, cnt = bucket_of(warc[ids])
-                    out_pid.extend([-1] * b_idx.size)
-                    out_doc.extend(b_idx.tolist())
-                    out_sc.extend(cnt.astype(np.float64).tolist())
-                newest = ids[-k:] if k > 0 else ids[:0]
-                out_pid.extend([pid] * newest.size)
-                out_doc.extend(newest.tolist())
-                out_sc.extend([0.0] * newest.size)
-                return pd.DataFrame(
-                    {
-                        "pid": np.array(out_pid, dtype=np.int64),
-                        "doc_id": np.array(out_doc, dtype=np.int64),
-                        "score": np.array(out_sc, dtype=np.float64),
-                    }
-                )
-            if agg == "waveform":
-                if trows is None or not len(trows) or ids.size == 0:
-                    return pd.DataFrame(
-                        columns=["pid", "doc_id", "score"]
-                    )
-                tr = trows.sort_values("first_doc")
-                warc = np.concatenate(
-                    [np.cumsum(decode_varint(b)) for b in tr["ids_bin"]]
-                )
-                b_idx, cnt = bucket_of(warc[ids])
-                return pd.DataFrame(
-                    {
-                        "pid": pid,
-                        "doc_id": b_idx.astype(np.int64),
-                        "score": cnt.astype(np.float64),
-                    }
-                )
+            if fpfx is not None:
+                out["score"] = np.zeros(len(o_term), dtype=np.float64)
+                out["term"] = o_term
+            return pd.DataFrame(out)
+        if agg == "pairs":
+            # feature-tuple doc-co-occurrence counts over the match
+            # set -- the counting core of gatherFeatures
+            # (MiruAggregateUtil.gatherFeatures:77-291: per answer
+            # activity, stream the feature fields' terms and count
+            # each observed combination). Only (packed tuple, count)
+            # rows leave the task; the cross product is per-DOC
+            # (multi-valued fields expand), never across docs.
+            # `tuple_specs` batches SEVERAL features into this one
+            # pass (strut's catwalk features): each spec owns a
+            # disjoint int64 key range via its offset, so every
+            # feature's counts ride the same exchange.
+            if tuple_specs is not None:
+                specs = tuple_specs
+            else:
+                groups = [facet_terms or [], facet_terms2 or []]
+                if facet_terms3:
+                    groups.append(facet_terms3)
+                specs = [(0, groups)]
+            all_k, all_c = [], []
+            for off, groups in specs:
+                keys, counts = _tuple_counts(ids, ids_out, groups)
+                if keys.size:
+                    all_k.append(keys + off)
+                    all_c.append(counts)
             return pd.DataFrame(
                 {
-                    "pid": [pid],
-                    "doc_id": [0],
-                    "score": [float(ids.size)],
+                    "pid": pid,
+                    "doc_id": np.concatenate(all_k) if all_k else _EMPTY,
+                    "score": (
+                        np.concatenate(all_c) if all_c else _EMPTY
+                    ).astype(np.float64),
                 }
             )
-
-        if not use_blockmax or has_all or k <= 0 or strategy == "time":
-            ids, scores = score_subset(pid, pdf, idf, bounds, rem)
-            out_ids, out_scores = topk_of(ids, scores)
-        else:
-            # ---- exact block-max pruning over aligned blk ranges ----
-            ub_row = np.where(
-                pdf["term"].isin(scoring_terms).to_numpy(),
-                pdf["term"].map(idf).fillna(0.0).to_numpy()
-                * _bm25_tf_part(
-                    pdf["max_tf"].to_numpy().astype(np.float64),
-                    pdf["min_dl"].to_numpy().astype(np.float64),
-                    avgdl,
-                ),
-                0.0,
+        if agg == "waveforms":
+            # per-facet-value waveforms in ONE pass (trending's
+            # batched shape: TrendingInjectable computes an
+            # analytics waveform per distinct term) -- emits
+            # (pid, bucket, value_idx, count) rows
+            fts = (
+                facet_keys(ids_out) if fpfx is not None
+                else (facet_terms or [])
             )
-            blk_ub = (
-                pd.Series(ub_row, index=pdf.index)
-                .groupby(pdf["blk"].to_numpy())
-                .sum()
-                .sort_values(ascending=False)
-            )
-            n_blocks_all = len(blk_ub)
-            if theta0 > 0.0:
-                # cross-partition theta: the driver's seed score (the
-                # k-th best of the densest pid, computed job-free on the
-                # serving node) is a lower bound on the GLOBAL k-th
-                # score, so any block whose upper bound cannot reach it
-                # can never contribute to the merged top-k -- prune it
-                # before phase 1 even starts. This is the one-partition-
-                # at-a-time solution-state handoff of the reference's
-                # solver turned into a broadcast seed.
-                blk_ub = blk_ub[blk_ub.to_numpy() >= theta0]
-            blks_desc = blk_ub.index.to_numpy()
-            # phase 1: grow the scored prefix until >= k docs matched
-            scored_ids = np.empty(0, dtype=np.int64)
-            scored_scores = np.empty(0, dtype=np.float64)
-            m = min(4, len(blks_desc))
-            scored_blks: set = set()
-            while True:
-                subset = set(blks_desc[:m].tolist())
-                new = subset - scored_blks
-                if new:
-                    sub_rows = pdf[pdf["blk"].isin(subset)]
-                    scored_ids, scored_scores = score_subset(
-                        pid, sub_rows, idf, bounds, rem
-                    )
-                    scored_blks = subset
-                if scored_ids.size >= k or m >= len(blks_desc):
-                    break
-                m = min(m * 4, len(blks_desc))
-            if scored_ids.size >= k:
-                kth = np.partition(-scored_scores, k - 1)
-                theta = max(-kth[k - 1], theta0)
-                # phase 2: every blk whose bound can reach theta
-                cand = set(blk_ub.index[blk_ub.to_numpy() >= theta].tolist())
-                cand |= scored_blks
-                if cand != scored_blks:
-                    sub_rows = pdf[pdf["blk"].isin(cand)]
-                    scored_ids, scored_scores = score_subset(
-                        pid, sub_rows, idf, bounds, rem
-                    )
-                    scored_blks = cand
-            if counter is not None:
-                counter["blocks_scored"] = (
-                    counter.get("blocks_scored", 0) + len(scored_blks)
-                )
-                counter["blocks_total"] = (
-                    counter.get("blocks_total", 0) + n_blocks_all
-                )
-            out_ids, out_scores = topk_of(scored_ids, scored_scores)
+            o_b, o_v, o_c = [], [], []
+            o_t: list = []
+            for i, t in enumerate(fts):
+                c = ids_out.get(t)
+                if c is None or not c.size:
+                    continue
+                pos = np.minimum(np.searchsorted(ids, c), ids.size - 1)
+                inter = c[ids[pos] == c]
+                if not inter.size:
+                    continue
+                ub, cnt = bucket_of(warc[inter])
+                o_b.append(ub)
+                o_v.append(np.full(ub.size, i, dtype=np.int64))
+                o_c.append(cnt)
+                o_t.extend([t] * ub.size)
+            if not o_b:
+                return empty
+            out = {
+                "pid": pid,
+                "doc_id": np.concatenate(o_b),
+                "score": np.concatenate(o_v).astype(np.float64),
+                "cnt": np.concatenate(o_c).astype(np.int64),
+            }
+            if fpfx is not None:
+                out["score"] = np.zeros(len(o_t), dtype=np.float64)
+                out["term"] = o_t
+            return pd.DataFrame(out)
+        if agg == "metrics":
+            # per-bucket SUM of a numeric field over the match set
+            # (Metrics.metricingSum, Metrics.java:82-98: sum over
+            # bit-slice bitmaps of multiplier x boundedCardinality;
+            # here the decomposition is per value-term: sum over
+            # composed numeric terms of value x |match AND postings|)
+            acc: dict = {}
+            if fpfx is not None:
+                # streamed numeric facet: the value is decodable
+                # from the composed term itself (order-preserving
+                # encoding, fields.encode_num) -- no driver list
+                from ..fields import FIELD_SEP, decode_num
 
+                fts = facet_keys(ids_out)
+                fvs = [
+                    float(decode_num(t.split(FIELD_SEP, 1)[1]))
+                    for t in fts
+                ]
+            else:
+                fts, fvs = facet_terms or [], facet_values or []
+            for t, v in zip(fts, fvs):
+                c = ids_out.get(t)
+                if c is None or not c.size:
+                    continue
+                pos = np.minimum(np.searchsorted(ids, c), ids.size - 1)
+                inter = c[ids[pos] == c]
+                if not inter.size:
+                    continue
+                ub, cnt = bucket_of(warc[inter])
+                for b, n in zip(ub, cnt):
+                    acc[int(b)] = acc.get(int(b), 0.0) + v * int(n)
+            return pd.DataFrame(
+                {
+                    "pid": pid,
+                    "doc_id": np.array(sorted(acc), dtype=np.int64),
+                    "score": np.array(
+                        [acc[b] for b in sorted(acc)], dtype=np.float64
+                    ),
+                }
+            )
+        if agg == "distincts":
+            # |match AND facet-term postings| per facet value --
+            # the distincts gatherer (DistinctsQuery filter +
+            # gatherDistinctsForField) as per-pid intersection
+            # counts; only (value_idx, count) rows leave the task
+            out_idx, out_cnt = [], []
+            out_t: list = []
+            fts = (
+                facet_keys(ids_out) if fpfx is not None
+                else (facet_terms or [])
+            )
+            for i, t in enumerate(fts):
+                c = ids_out.get(t)
+                if c is None or not c.size:
+                    continue
+                pos = np.minimum(np.searchsorted(ids, c), ids.size - 1)
+                n = int((ids[pos] == c).sum())
+                if n:
+                    out_idx.append(i)
+                    out_cnt.append(float(n))
+                    out_t.append(t)
+            out = {
+                "pid": pid,
+                "doc_id": np.array(out_idx, dtype=np.int64),
+                "score": np.array(out_cnt, dtype=np.float64),
+            }
+            if fpfx is not None:
+                out["doc_id"] = np.zeros(len(out_t), dtype=np.int64)
+                out["term"] = out_t
+            return pd.DataFrame(out)
+        if agg == "stumptown":
+            # ONE pass over this pid's match set yields BOTH outputs
+            # (Stumptown.stumptowning, Stumptown.java:37-73: newest-k
+            # activities off the answer's descending iterator + the
+            # same answer's boundedCardinalities waveform): bucket
+            # rows tagged pid=-1, newest-k candidate rows with the
+            # real pid (score 0, TIME semantics -- docIDs are
+            # time-ordered within a pid)
+            out_pid: list = []
+            out_doc: list = []
+            out_sc: list = []
+            if warc is not None:
+                b_idx, cnt = bucket_of(warc[ids])
+                out_pid.extend([-1] * b_idx.size)
+                out_doc.extend(b_idx.tolist())
+                out_sc.extend(cnt.astype(np.float64).tolist())
+            newest = ids[-k:] if k > 0 else ids[:0]
+            out_pid.extend([pid] * newest.size)
+            out_doc.extend(newest.tolist())
+            out_sc.extend([0.0] * newest.size)
+            return pd.DataFrame(
+                {
+                    "pid": np.array(out_pid, dtype=np.int64),
+                    "doc_id": np.array(out_doc, dtype=np.int64),
+                    "score": np.array(out_sc, dtype=np.float64),
+                }
+            )
+        if agg == "waveform":
+            b_idx, cnt = bucket_of(warc[ids])
+            return pd.DataFrame(
+                {
+                    "pid": pid,
+                    "doc_id": b_idx.astype(np.int64),
+                    "score": cnt.astype(np.float64),
+                }
+            )
         return pd.DataFrame(
-            {"pid": pid, "doc_id": out_ids, "score": out_scores}
+            {"pid": [pid], "doc_id": [0], "score": [float(ids.size)]}
         )
 
     return kernel
 
-
-def _decode_pdf_composite(pdf):
-    """Task-level composite decode: ALL of a task's posting rows ->
-    {term: (cids, tfs, dls)} with absolute composite (pid << 32 |
-    doc_id) ids, plus {term: df} when a `df` column rides (unpinned
-    vocabulary). ONE varint pass per term over the concatenated blobs
-    -- the kernel twin of SearchEngine._decode_posting_table, built
-    from the pandas chunk mapInPandas hands the task. Filter-only
-    terms arrive with nulled tf/dl blobs (shed before the exchange)
-    and reuse their id array as the sentinel, exactly like the
-    per-pid kernel's decode_terms."""
-    import pandas as pd
-
-    pdf = pdf.sort_values(["term", "pid", "blk"], kind="stable")
-    terms = pdf["term"].to_numpy()
-    pids = pdf["pid"].to_numpy().astype(np.int64)
-    ns = pdf["n"].to_numpy().astype(np.int64)
-    ids_bins = pdf["ids_bin"].to_numpy()
-    has_blobs = "tfs_bin" in pdf.columns
-    tfs_bins = pdf["tfs_bin"].to_numpy() if has_blobs else None
-    dls_bins = pdf["dls_bin"].to_numpy() if has_blobs else None
-    dfs = pdf["df"].to_numpy() if "df" in pdf.columns else None
-    dec: dict = {}
-    dfmap: dict = {}
-    bnd = np.flatnonzero(terms[1:] != terms[:-1]) + 1
-    starts = np.concatenate(([0], bnd, [len(terms)]))
-    for gi in range(len(starts) - 1):
-        s, e = int(starts[gi]), int(starts[gi + 1])
-        t = terms[s]
-        gaps = decode_varint(b"".join(ids_bins[s:e]))
-        acc = np.cumsum(gaps)
-        row_n = ns[s:e]
-        rs = np.zeros(e - s, dtype=np.int64)
-        np.cumsum(row_n[:-1], out=rs[1:])
-        base = acc[rs] - gaps[rs] - (pids[s:e] << 32)
-        cids = acc - np.repeat(base, row_n)
-        if not has_blobs or tfs_bins[s] is None:
-            dec[t] = (cids, cids, cids)
-        else:
-            dec[t] = (
-                cids,
-                decode_varint(b"".join(tfs_bins[s:e])),
-                decode_varint(b"".join(dls_bins[s:e])),
-            )
-        if dfs is not None and not pd.isna(dfs[s]):
-            dfmap[t] = int(dfs[s])
-    return dec, dfmap
-
-
-def _make_composite_kernel(
-    tree,
-    scoring_terms: list[str],
-    n_docs: int,
-    avgdl: float,
-    k: int,
-    pid_counts: dict,
-    expansions: dict,
-    time_bounds: dict | None,
-    time_spec: tuple | None,
-    removed_map: dict | None,
-    idf_map: dict | None,
-):
-    """Task-level composite-id kernel for the plain scoring search:
-    instead of looping the task's pids through the per-pid kernel
-    (O(pids x terms) small-array NumPy calls -- the latency floor of
-    wide queries at fine-grained time partitioning), decode the whole
-    task ONCE into composite (pid << 32 | doc_id) arrays and run ONE
-    _eval_tree + ONE sorted-term scoring pass + ONE top-k over all of
-    the task's pids. Composite ids are globally sorted per term, so
-    every evaluator step is the same code path the serving node runs
-    (_search_local) -- scores are bit-identical to the per-pid kernel
-    (same per-doc contributions in the same sorted-term order) and the
-    task's k best rows by (score desc, pid, doc_id) are exactly its
-    contribution to the global TakeOrdered merge.
-
-    Used when agg is None, strategy is score-ranked, no phrase members,
-    no match-all marker rows and no unpinned tombstones ride the
-    exchange; every other shape stays on the per-pid kernel."""
-    import pandas as pd
-
-    def run(batches):
-        dfs_ = [b for b in batches if len(b)]
-        if not dfs_:
-            return
-        pdf = pd.concat(dfs_, ignore_index=True)
-        trows = None
-        if "rk" in pdf.columns:
-            rk = pdf["rk"].to_numpy()
-            if (rk == "t").any():
-                trows = pdf[rk == "t"]
-            pdf = pdf[rk == "p"]
-        if not len(pdf):
-            return
-        dec, dfmap = _decode_pdf_composite(pdf)
-        idf = (
-            idf_map
-            if idf_map is not None
-            else {t: bm25_idf(n_docs, d) for t, d in dfmap.items()}
-        )
-        cmap = {t: v[0] for t, v in dec.items()}
-        matches = _eval_tree(
-            tree, cmap, expansions, np.empty(0, dtype=np.int64), None
-        )
-        # per-boundary-pid time bounds, applied to the matching span of
-        # the composite array (identical to the per-pid kernel's
-        # resolve_bounds + range filter; interior pids are unbounded)
-        if matches.size and (
-            time_bounds is not None or time_spec is not None
-        ):
-            if time_bounds is not None:
-                bpids = sorted(time_bounds)
-            else:
-                t0_us, t1_us, plo, phi = time_spec
-                bpids = sorted({plo, phi})
-            for p in bpids:
-                if not matches.size:
-                    break
-                lo_i = np.searchsorted(matches, p << 32)
-                hi_i = np.searchsorted(matches, (p + 1) << 32)
-                if hi_i <= lo_i:
-                    continue  # none of this task's matches are in p
-                n = int(pid_counts.get(p, 0))
-                if time_bounds is not None:
-                    lo, hi = time_bounds.get(p, (0, n))
-                else:
-                    tr = (
-                        trows[trows["pid"] == p]
-                        if trows is not None else None
-                    )
-                    if tr is None or not len(tr):
-                        lo, hi = 0, n
-                    else:
-                        tr = tr.sort_values("first_doc")
-                        warc = np.concatenate(
-                            [
-                                np.cumsum(decode_varint(b))
-                                for b in tr["ids_bin"]
-                            ]
-                        )
-                        lo = int(np.searchsorted(warc, t0_us, "left"))
-                        hi = int(np.searchsorted(warc, t1_us, "right"))
-                seg = matches[lo_i:hi_i] - (p << 32)
-                keep = np.ones(matches.size, dtype=bool)
-                keep[lo_i:hi_i] = (seg >= lo) & (seg < hi)
-                matches = matches[keep]
-        if removed_map and matches.size:
-            rem = np.concatenate(
-                [
-                    (np.int64(p) << 32) + removed_map[p]
-                    for p in sorted(removed_map)
-                ]
-            )
-            pos = np.minimum(np.searchsorted(rem, matches), rem.size - 1)
-            matches = matches[rem[pos] != matches]
-        if matches.size == 0:
-            return
-        scores = np.zeros(matches.size, dtype=np.float64)
-        for t in scoring_terms:  # sorted order fixes float summation
-            e = dec.get(t)
-            if e is None or e[0].size == 0:
-                continue
-            _accumulate_term(
-                scores, matches, e[0], e[1], e[2], idf[t], avgdl
-            )
-        order = np.lexsort((matches, -scores))
-        if k > 0:
-            order = order[:k]
-        cids = matches[order]
-        yield pd.DataFrame(
-            {
-                "pid": (cids >> np.int64(32)).astype(np.int64),
-                "doc_id": (cids & np.int64(0xFFFFFFFF)).astype(np.int64),
-                "score": scores[order],
-            }
-        )
-
-    return run
 
 
 class SearchEngine(FeatureOpsMixin):
@@ -1144,6 +1101,21 @@ class SearchEngine(FeatureOpsMixin):
         max_pinned_removals: int = 2_000_000,
         as_of: str | None = None,
     ):
+        # format check first: a pre-format-2 index fails before any
+        # session or Spark work (a missing "format" key means format 1)
+        self.paths = IndexPaths(index_dir)
+        meta_path = os.path.join(index_dir, "meta.json")
+        self.meta = {}
+        if os.path.exists(meta_path):
+            with open(meta_path) as f:
+                self.meta = json.load(f)
+        fmt = int(self.meta.get("format", 1))
+        if fmt < 2:
+            raise IndexFormatError(
+                f"{index_dir} is a format-{fmt} index; this engine needs "
+                "format >= 2 (per-block 't' time-index rows). Rebuild it "
+                "with jobs/build_index_job.py"
+            )
         # AQE re-plans every exchange as its own job; for small interactive
         # top-k queries that is ~6 jobs and +30-40% latency with no upside
         # (the kernel shuffle is tiny). Wide analytic workloads sharing the
@@ -1175,12 +1147,6 @@ class SearchEngine(FeatureOpsMixin):
         except Exception:  # bare test doubles without newSession
             self.spark = spark
         spark = self.spark
-        self.paths = IndexPaths(index_dir)
-        meta_path = os.path.join(index_dir, "meta.json")
-        self.meta = {}
-        if os.path.exists(meta_path):
-            with open(meta_path) as f:
-                self.meta = json.load(f)
         from ..index.build import (
             _tags_as_of,
             read_docmap,
@@ -1545,21 +1511,6 @@ class SearchEngine(FeatureOpsMixin):
         self.docmap = self.docmap.cache()
         return self
 
-    def _time_bounds(self, pids: list[int], t0_us: int, t1_us: int) -> dict:
-        """Per-pid contiguous docID interval [lo, hi) for the time range --
-        docIDs are time-ordered so the mask is an interval (miru
-        getClosestId, LabTimeIndex.java:191-208)."""
-        rows = (
-            self.docmap.filter(F.col("pid").isin([int(p) for p in pids]))
-            .groupBy("pid")
-            .agg(
-                F.sum((F.col("warc_us") < t0_us).cast("long")).alias("lo"),
-                F.sum((F.col("warc_us") <= t1_us).cast("long")).alias("hi"),
-            )
-            .collect()
-        )
-        return {int(r["pid"]): (int(r["lo"]), int(r["hi"])) for r in rows}
-
     # -- search ------------------------------------------------------------
     def _prep_query(
         self,
@@ -1700,7 +1651,6 @@ class SearchEngine(FeatureOpsMixin):
                     int(time_range_us[1]),
                 )
         relevant_pids = sorted(self.pid_counts)
-        time_bounds = None
         time_spec = None
         pid_range = None
         boundary_pids: list[int] = []
@@ -1713,15 +1663,12 @@ class SearchEngine(FeatureOpsMixin):
             relevant_pids = [
                 p for p in relevant_pids if pid_lo <= p <= pid_hi
             ]
-            if int(self.meta.get("format", 1)) >= 2:
-                # boundary pids resolve their exact [lo, hi) interval in
-                # the kernel from their 't' rows -- same job, no collect
-                time_spec = (int(t0_us), int(t1_us), int(pid_lo), int(pid_hi))
-                boundary_pids = [
-                    int(p) for p in {pid_lo, pid_hi} if p in self.pid_counts
-                ]
-            else:  # legacy format-1 index: driver-side bounds job
-                time_bounds = self._time_bounds(relevant_pids, t0_us, t1_us)
+            # boundary pids resolve their exact [lo, hi) interval from
+            # their 't' rows (in-task on the kernel route) -- no collect
+            time_spec = (int(t0_us), int(t1_us), int(pid_lo), int(pid_hi))
+            boundary_pids = [
+                int(p) for p in {pid_lo, pid_hi} if p in self.pid_counts
+            ]
 
         idf_map = None
         if self._term_df is not None:
@@ -1738,7 +1685,6 @@ class SearchEngine(FeatureOpsMixin):
             "has_all_node": has_all_node,
             "relevant_pids": relevant_pids,
             "pid_range": pid_range,
-            "time_bounds": time_bounds,
             "time_spec": time_spec,
             "boundary_pids": boundary_pids,
             "idf_map": idf_map,
@@ -1768,26 +1714,25 @@ class SearchEngine(FeatureOpsMixin):
         tuple_specs: list | None = None,
         facet_prefixes: list | None = None,
     ) -> DataFrame:
-        """Build the distributed match+score frame for a query: one
-        mapInPandas kernel pass over the pruned posting blocks, yielding
-        (pid, doc_id, score) per-partition top-k rows. `search` collects
-        its global top-k; plan tests assert its physical shape.
+        """Build the distributed frame for a query: one mapInPandas pass
+        over the pruned posting blocks. Without `agg` every task runs the
+        shared top-k evaluator (`_topk_runner`) and yields its (pid,
+        doc_id, score) top-k rows -- score-ranked, or newest-first for
+        strategy="time"; `search` collects the global top-k, plan tests
+        assert the physical shape.
 
-        `agg="count"|"waveform"|"distincts"` switches to match-set
-        aggregation (see _make_kernel): no term scores, so EVERY term
-        sheds its tf/dl blobs before the exchange; "waveform" ships every
-        relevant pid's 't' rows so bucketing happens in-task;
-        "distincts" fetches `facet_terms` postings alongside the query's
-        and emits only (value_idx, count) rows per task."""
+        `agg` switches to per-pid match-set aggregation (see
+        _make_kernel): no term scores, so EVERY term sheds its tf/dl
+        blobs before the exchange; time-bucketing modes ship every
+        relevant pid's 't' rows so bucketing happens in-task; facet modes
+        fetch the facet postings alongside the query's and emit only
+        per-value rows per task. Output columns: `_kernel_columns`."""
         p = prep or self._prep_query(
             query, locale, time_range_us, constraints, authz
         )
         tree = p["tree"]
         expansions = p["expansions"]
         scoring_terms = [] if agg is not None else p["scoring_terms"]
-        if agg is not None:
-            use_blockmax = False
-            theta0 = 0.0
         fetch_terms = p["fetch_terms"]
         facet_groups: list[list] = []
         if agg in ("distincts", "metrics", "aggregate", "waveforms",
@@ -1801,7 +1746,6 @@ class SearchEngine(FeatureOpsMixin):
                         facet_groups.append(sorted(set(g)))
         has_all_node = p["has_all_node"]
         relevant_pids = p["relevant_pids"]
-        time_bounds = p["time_bounds"]
         time_spec = p["time_spec"]
         boundary_pids = p["boundary_pids"]
         idf_map = p["idf_map"]
@@ -1956,40 +1900,16 @@ class SearchEngine(FeatureOpsMixin):
                 )
             )
 
-        kernel = _make_kernel(
-            tree,
-            scoring_terms,
-            self.n_docs,
-            self.avgdl,
-            k,
-            self.pid_counts,
-            expansions,
-            time_bounds,
-            use_blockmax,
-            idf_map=idf_map,
-            time_spec=time_spec,
-            removed_map=self._removed_map,
-            theta0=theta0,
-            strategy=strategy,
-            agg=agg,
-            bucket_us=bucket_us,
-            bucket_origin_us=bucket_origin_us,
-            bucket_count=bucket_count,
-            facet_terms=facet_terms,
-            facet_values=facet_values,
-            facet_terms2=facet_terms2,
-            facet_terms3=facet_terms3,
-            tuple_specs=tuple_specs,
-            facet_prefixes=facet_prefixes,
-        )
         # hash-co-locate each pid's fetched blocks on one task, then ONE
-        # pandas call per task loops the pids it owns -- same semantics as
-        # groupBy(pid).applyInPandas but without a per-group Arrow+pandas
-        # round trip (a query touches O(pids) groups; at fine-grained time
-        # partitioning that per-group overhead dominated latency). Task
-        # count is bounded by the pids actually touched, not the session
-        # shuffle-partition default (which would schedule ~200 mostly
-        # empty tasks per interactive query).
+        # pandas call per task: the top-k runner evaluates all of the
+        # task's pids at once, the agg kernel loops the pids it owns --
+        # same semantics as groupBy(pid).applyInPandas but without a
+        # per-group Arrow+pandas round trip (a query touches O(pids)
+        # groups; at fine-grained time partitioning that per-group
+        # overhead dominated latency). Task count is bounded by the pids
+        # actually touched, not the session shuffle-partition default
+        # (which would schedule ~200 mostly empty tasks per interactive
+        # query).
         # cached engines pre-co-located the postings by pid, so the plain
         # term-query path needs NO exchange at all; unions (time-index /
         # marker rows) or uncached reads fall back to a per-query
@@ -2016,36 +1936,50 @@ class SearchEngine(FeatureOpsMixin):
                 ),
             )
             src = blocks.repartition(nparts, "pid")
-        out_schema = (
-            _RESULT_SCHEMA
-            + (", cnt long" if agg in ("aggregate", "waveforms") else "")
-            # streamed facet mode emits the composed value term itself
-            # (metrics excepted: its values decode in-kernel and only
-            # per-bucket sums leave the task)
-            + (
-                ", term string"
-                if facet_prefixes and agg != "metrics"
-                else ""
-            )
+        out_schema = ", ".join(
+            f"{c} {_OUT_TYPES[c]}"
+            for c in _kernel_columns(agg, facet_prefixes)
         )
-        if (
-            agg is None
-            and strategy != "time"
-            and not phrase_terms
-            and not has_all_node
-            and not unpinned_removals
-        ):
-            # plain scoring search: the task-level composite kernel
-            # (one decode + one eval + one top-k per TASK) replaces the
-            # per-pid loop -- same scores bit-for-bit, O(terms) NumPy
-            # calls per task instead of O(pids x terms)
-            runner = _make_composite_kernel(
-                tree, scoring_terms, self.n_docs, self.avgdl, k,
-                self.pid_counts, expansions, time_bounds, time_spec,
-                self._removed_map, idf_map,
+        if agg is None:
+            runner = _topk_runner(
+                {0: self._topk_plan(p, k, use_blockmax, strategy, theta0)},
+                self.n_docs, self.pid_counts, time_spec,
+                self._removed_comp,
             )
-            return src.mapInPandas(runner, out_schema)
-        return src.mapInPandas(_per_pid_dispatch(kernel), out_schema)
+        else:
+            runner = _per_pid_dispatch(_make_kernel(
+                tree, k, self.pid_counts, expansions,
+                time_spec=time_spec,
+                removed_comp=self._removed_comp,
+                agg=agg,
+                bucket_us=bucket_us,
+                bucket_origin_us=bucket_origin_us,
+                bucket_count=bucket_count,
+                facet_terms=facet_terms,
+                facet_values=facet_values,
+                facet_terms2=facet_terms2,
+                facet_terms3=facet_terms3,
+                tuple_specs=tuple_specs,
+                facet_prefixes=facet_prefixes,
+            ))
+        return src.mapInPandas(runner, out_schema)
+
+    def _topk_plan(
+        self, prep: dict, k: int, use_blockmax: bool,
+        strategy: str = "tfidf", theta0: float = 0.0,
+    ) -> _TopK:
+        """The evaluator's view of a planned query, identical on both
+        routes (block-max gated by LOCAL_BLOCKMAX_MIN_POSTINGS/_CELLS)."""
+        return _TopK(
+            prep["tree"], prep["expansions"], prep["scoring_terms"],
+            prep["idf_map"], self.avgdl, k, strategy,
+            (
+                int(self.meta.get("block_span", 1 << 30)),
+                self.LOCAL_BLOCKMAX_MIN_POSTINGS,
+                self.LOCAL_BLOCKMAX_MIN_CELLS,
+            ) if use_blockmax else None,
+            theta0,
+        )
 
     # -- serving-node local path -------------------------------------------
     def _segment_files(self) -> list[str]:
@@ -2258,27 +2192,39 @@ class SearchEngine(FeatureOpsMixin):
             )
         return est
 
-    def _theta_seed(self, prep: dict, k: int) -> float:
-        """Cross-partition theta seed for the distributed block-max
-        kernel: score ONE pid (the densest relevant one) on the serving
-        node via the job-free pyarrow path and take its k-th score. That
-        score lower-bounds the global k-th, so every kernel task can
-        discard blocks whose upper bound cannot reach it (SURVEY §4's
-        custom optimization; the reference's analog is its solver
-        carrying solution state across replica hops). Returns 0.0 when
-        seeding is unavailable or too expensive (whole-corpus scans)."""
+    def _seed_eligible(self, prep: dict, k: int) -> bool:
+        """Would a distributed search read a theta seed? Only when the
+        evaluator's block-max can engage (a score-ranked, non-match-all,
+        non-phrase shape past the LOCAL_BLOCKMAX_MIN_POSTINGS gate), the
+        serving node can apply every mask (pinned dictionary and
+        tombstones), and one pid's share of the postings fits its
+        budget -- the seed's own read."""
         if (
             self._term_df is None
-            or prep["has_all_node"]
             or k <= 0
-            or prep["time_bounds"] is not None
+            or prep["has_all_node"]
+            or prep.get("phrase_terms")
+            or not prep["scoring_terms"]
             or (self._removed_df is not None and self._removed_map is None)
             or not prep["relevant_pids"]
         ):
-            return 0.0
-        # bound the seed's read: one pid's share of the postings
+            return False
         est = self._estimated_postings(prep)
-        if est // max(1, len(prep["relevant_pids"])) > self.local_max_postings:
+        return (
+            est >= self.LOCAL_BLOCKMAX_MIN_POSTINGS
+            and est // len(prep["relevant_pids"]) <= self.local_max_postings
+        )
+
+    def _theta_seed(self, prep: dict, k: int) -> float:
+        """Cross-partition theta seed for the distributed block-max:
+        score ONE pid (the densest relevant one) on the serving node via
+        the job-free pyarrow path and take its k-th score. That score
+        lower-bounds the global k-th, so every kernel task can discard
+        cells whose upper bound cannot reach it (SURVEY §4's custom
+        optimization; the reference's analog is its solver carrying
+        solution state across replica hops). Returns 0.0 unless
+        `_seed_eligible`."""
+        if not self._seed_eligible(prep, k):
             return 0.0
         seed_pid = max(
             prep["relevant_pids"], key=lambda p: self.pid_counts.get(p, 0)
@@ -2337,7 +2283,6 @@ class SearchEngine(FeatureOpsMixin):
     def _local_eligible(self, prep: dict) -> bool:
         return (
             self._term_df is not None
-            and prep["time_bounds"] is None  # format-1 needs a Spark job
             # unpinned tombstones can only mask on the kernel path
             and (self._removed_df is None or self._removed_map is not None)
             and self._estimated_postings(prep) <= self.local_max_postings
@@ -2378,10 +2323,6 @@ class SearchEngine(FeatureOpsMixin):
                 "driver budget); per-term stats and the serving path "
                 "are unavailable"
             )
-        if prep["time_bounds"] is not None:
-            reasons.append(
-                "format-1 index resolves time bounds with a Spark job"
-            )
         if self._removed_df is not None and self._removed_map is None:
             reasons.append(
                 "tombstone log too large to pin driver-side; masking "
@@ -2407,29 +2348,13 @@ class SearchEngine(FeatureOpsMixin):
             set(prep["fetch_terms"]) - scoring - phrase_members
         )
 
-        # would the distributed kernel get a theta seed? (mirror of
-        # _theta_seed's cheap guards -- the seed itself is real work)
-        seed_ok = (
-            self._term_df is not None
-            and not prep["has_all_node"]
-            and k > 0
-            and prep["time_bounds"] is None
-            and (self._removed_df is None or self._removed_map is not None)
-            and bool(prep["relevant_pids"])
-            and est // max(1, len(prep["relevant_pids"]))
-            <= self.local_max_postings
+        gate = (
+            "off by default (lower LOCAL_BLOCKMAX_MIN_POSTINGS to engage "
+            "on score-spread corpora)"
+            if self.LOCAL_BLOCKMAX_MIN_POSTINGS >= (1 << 60)
+            else f"engages at >= {self.LOCAL_BLOCKMAX_MIN_POSTINGS:,} "
+            f"postings (this query: {est:,})"
         )
-
-        # mirror of kernel_frame's dispatch: plain scoring searches run
-        # the task-level composite kernel; every other shape loops pids
-        composite = (
-            not prep["has_all_node"]
-            and not phrase_members
-            and not (
-                self._removed_df is not None and self._removed_map is None
-            )
-        )
-
         rep = {
             "query": query,
             "tree": repr(prep["tree"]),
@@ -2444,10 +2369,7 @@ class SearchEngine(FeatureOpsMixin):
                 "storage is reachable, then 1 job)"
             ),
             "distributed_reasons": reasons,
-            "kernel": (
-                None if local
-                else "composite-task" if composite else "per-pid"
-            ),
+            "kernel": None if local else "composite-task",
             "n_fetch_terms": len(prep["fetch_terms"]),
             "n_scoring_terms": len(prep["scoring_terms"]),
             "prefix_expansions": {
@@ -2468,35 +2390,18 @@ class SearchEngine(FeatureOpsMixin):
             "n_pids_relevant": len(prep["relevant_pids"]),
             "pid_range": prep["pid_range"],
             "time_pruning": (
-                "none"
-                if time_range_us is None and prep["time_spec"] is None
-                and prep["time_bounds"] is None
+                "none" if prep["time_spec"] is None
                 else "kernel-side 't' rows (format 2)"
-                if prep["time_spec"] is not None
-                else "driver bounds job (format 1)"
             ),
             "retention_min_us": (
                 int(self.meta.get("retention_min_us", 0) or 0) or None
             ),
             "blockmax": (
-                (
-                    "off by default (lower LOCAL_BLOCKMAX_MIN_POSTINGS "
-                    "to engage on score-spread corpora)"
-                    if self.LOCAL_BLOCKMAX_MIN_POSTINGS >= (1 << 60)
-                    else "engages at >= "
-                    f"{self.LOCAL_BLOCKMAX_MIN_POSTINGS:,} postings "
-                    f"(this query: {est:,})"
-                )
-                if local
-                else "composite-task kernel is exhaustive (one "
-                "vectorized pass; block-max not applicable)"
-                if composite
-                else (
-                    "exact block-max kernel"
-                    + (
-                        ", theta-seeded from the densest pid"
-                        if seed_ok else ", unseeded"
-                    )
+                gate if local
+                else "composite-task evaluator, block-max " + gate
+                + (
+                    ", theta-seeded from the densest pid"
+                    if self._seed_eligible(prep, k) else ""
                 )
             ),
             "tombstones": (
@@ -2564,13 +2469,14 @@ class SearchEngine(FeatureOpsMixin):
             }
         return rep
 
-    def _local_match_ids(self, prep: dict) -> np.ndarray:
-        """Exact composite (pid << 32 | doc_id) match set of a query on
-        the serving node -- the match half of `_search_local` without
-        the scoring half: tree evaluation, boundary-pid time mask,
-        tombstone mask. Feeds `count` and `waveform`."""
-        dset = self._dataset()
-        term_cids, _tfs, _dls = self._postings_maps(
+    def _local_inputs(self, prep: dict) -> _Inputs:
+        """Serving-route evaluator inputs, the one input step of every
+        serving-node match or top-k: the query's postings through the
+        decoded-postings LRU; phrase members re-fetched WITH pos blobs,
+        bypassing the LRU (position arrays are the largest per-term
+        payload; keeping them out keeps its budget meaningful);
+        boundary-pid bounds; the match-all universe; pinned tombstones."""
+        cids, tfs, dls = self._postings_maps(
             prep["fetch_terms"], prep["pid_range"]
         )
         term_pos: dict = {}
@@ -2584,39 +2490,23 @@ class SearchEngine(FeatureOpsMixin):
                 ),
                 positions=True,
             )
-        bounds = self._local_bounds(prep, dset)
-        if prep["has_all_node"]:
-            spans = []
-            for p in prep["relevant_pids"]:
-                n = int(self.pid_counts.get(p, 0))
-                lo, hi = bounds.get(int(p), (0, n))
-                lo, hi = max(lo, 0), min(hi, n)
-                if hi > lo:
-                    spans.append((int(p) << 32) + np.arange(lo, hi))
-            universe = (
-                np.concatenate(spans) if spans
-                else np.empty(0, dtype=np.int64)
-            )
-        else:
-            universe = np.empty(0, dtype=np.int64)
-        matches = _eval_tree(
-            prep["tree"], term_cids, prep["expansions"], universe, term_pos
+        bounds = self._local_bounds(prep)
+        return _Inputs(
+            {t: (c, tfs[t], dls[t]) for t, c in cids.items()},
+            term_pos,
+            _universe(prep["relevant_pids"], self.pid_counts, bounds)
+            if prep["has_all_node"] else None,
+            bounds,
+            self._removed_comp,
         )
-        for p, (lo, hi) in bounds.items():
-            if not matches.size:
-                break
-            s = np.searchsorted(matches, p << 32)
-            e = np.searchsorted(matches, (p + 1) << 32)
-            kl = np.searchsorted(matches, (p << 32) + lo)
-            kh = np.searchsorted(matches, (p << 32) + hi)
-            matches = np.concatenate(
-                (matches[:s], matches[kl:kh], matches[e:])
-            )
-        rem = self._removed_comp
-        if rem is not None and rem.size and matches.size:
-            pos = np.minimum(np.searchsorted(rem, matches), rem.size - 1)
-            matches = matches[rem[pos] != matches]
-        return matches
+
+    def _local_match_ids(self, prep: dict) -> np.ndarray:
+        """Exact composite (pid << 32 | doc_id) match set of a query on
+        the serving node (tree evaluation, boundary-pid time mask,
+        tombstone mask). Feeds `count`, `waveform` and the facet ops."""
+        return _match_set(
+            prep["tree"], prep["expansions"], self._local_inputs(prep)
+        )
 
     def _pid_times(self, pids) -> dict:
         """Per-pid docID -> warc_us arrays decoded from the 't' time-
@@ -2646,10 +2536,7 @@ class SearchEngine(FeatureOpsMixin):
         budget = 2 * self.local_max_postings
         for p in np.unique(arr_pids):
             sel = np.flatnonzero(arr_pids == p)
-            sel = sel[np.argsort(firsts[sel], kind="stable")]
-            arr = np.concatenate(
-                [np.cumsum(decode_varint(bins[i])) for i in sel]
-            )
+            arr = _t_times(firsts[sel], [bins[i] for i in sel])
             out[int(p)] = arr
             with self._post_cache_lock:
                 if self._times_cache_entries + arr.size <= budget:
@@ -2761,11 +2648,6 @@ class SearchEngine(FeatureOpsMixin):
         time arrays). Distributed path: ONE job; each pid's kernel task
         buckets its own matches against its own 't' rows, so only
         (bucket, count) rows leave the task."""
-        if int(self.meta.get("format", 1)) < 2:
-            raise ValueError(
-                "waveform requires a format>=2 index (per-block 't' "
-                "time rows)"
-            )
         bucket_us, origin = self._bucket_spec(
             bucket_seconds, segments, time_range_us
         )
@@ -2879,11 +2761,6 @@ class SearchEngine(FeatureOpsMixin):
         pid's task emits its bucket rows (tagged pid=-1) and its own
         newest-k candidates; only O(buckets + k) rows per task leave the
         exchange, never the match set."""
-        if int(self.meta.get("format", 1)) < 2:
-            raise ValueError(
-                "stumptown requires a format>=2 index (per-block 't' "
-                "time rows)"
-            )
         bucket_us, origin = self._bucket_spec(
             bucket_seconds, segments, time_range_us
         )
@@ -2978,11 +2855,6 @@ class SearchEngine(FeatureOpsMixin):
         waveform in the reference's dense divideTimeRangeIntoNSegments
         shape -- AnalyticsQuery's actual scoreset, one range + N
         segments shared by the whole filter map."""
-        if int(self.meta.get("format", 1)) < 2:
-            raise ValueError(
-                "waveform requires a format>=2 index (per-block 't' "
-                "time rows)"
-            )
         bucket_us, origin = self._bucket_spec(
             bucket_seconds, segments, time_range_us
         )
@@ -3243,11 +3115,6 @@ class SearchEngine(FeatureOpsMixin):
         )
         if strategy not in strategies:
             raise ValueError(f"strategy must be one of {strategies}")
-        if int(self.meta.get("format", 1)) < 2:
-            raise ValueError(
-                "trending requires a format>=2 index (per-block 't' "
-                "time rows)"
-            )
         bucket_us, origin = self._bucket_spec(
             bucket_seconds, segments, time_range_us
         )
@@ -3511,11 +3378,6 @@ class SearchEngine(FeatureOpsMixin):
                 f"metrics requires a numeric field, got {field!r} "
                 f"(numeric: {sorted(NUMERIC_FIELDS)})"
             )
-        if int(self.meta.get("format", 1)) < 2:
-            raise ValueError(
-                "metrics requires a format>=2 index (per-block 't' "
-                "time rows)"
-            )
         bucket_us, origin = self._bucket_spec(
             bucket_seconds, segments, time_range_us
         )
@@ -3765,37 +3627,16 @@ class SearchEngine(FeatureOpsMixin):
         out.sort(key=lambda vc: (-vc[1], str(vc[0])))
         return out[:top_n] if top_n is not None else out
 
-    def _local_bounds(self, prep: dict, dset) -> dict:
-        """Exact per-boundary-pid [lo, hi) docID interval from the 't'
-        time-index rows (LabTimeIndex.getClosestId analog), read via
-        pyarrow -- no Spark job."""
-        import pyarrow.dataset as pads
-
+    def _local_bounds(self, prep: dict) -> dict:
+        """Exact per-boundary-pid [lo, hi) docID interval from the pid's
+        (cached) time array -- no Spark job."""
         if prep["time_spec"] is None or not prep["boundary_pids"]:
             return {}
         t0_us, t1_us, _lo, _hi = prep["time_spec"]
-        trows = dset.to_table(
-            filter=(pads.field("row_type") == "t")
-            & pads.field("pid").isin(prep["boundary_pids"]),
-            columns=["pid", "first_doc", "ids_bin"],
-        )
-        out = {}
-        pids = trows["pid"].to_numpy()
-        firsts = trows["first_doc"].to_numpy()
-        bins = trows["ids_bin"].to_pylist()
-        for p in prep["boundary_pids"]:
-            sel = np.flatnonzero(pids == p)
-            if sel.size == 0:
-                continue
-            sel = sel[np.argsort(firsts[sel], kind="stable")]
-            warc = np.concatenate(
-                [np.cumsum(decode_varint(bins[i])) for i in sel]
-            )
-            out[int(p)] = (
-                int(np.searchsorted(warc, t0_us, "left")),
-                int(np.searchsorted(warc, t1_us, "right")),
-            )
-        return out
+        return {
+            p: _t_interval(times, t0_us, t1_us)
+            for p, times in self._pid_times(prep["boundary_pids"]).items()
+        }
 
     def _local_relation(self, rows: list) -> DataFrame:
         """Wrap serving-node winner rows as an Arrow-backed LocalRelation.
@@ -3823,65 +3664,34 @@ class SearchEngine(FeatureOpsMixin):
                      "dls_bin"]
 
     def _decode_posting_table(self, tbl, positions: bool = False) -> dict:
-        """Decode a fetched posting-rows table into
-        {term: (cids, tfs, dls)} with absolute composite
-        (pid << 32 | doc_id) ids, ascending. With `positions` the third
-        slot decodes pos_bin instead of dls_bin -- {term: (cids, tfs,
-        pos)}, the self-contained triple _eval_phrase consumes."""
+        """`_decode_blocks` over a fetched pyarrow posting-rows table:
+        {term: (cids, tfs, dls)}, or with `positions` {term: (cids, tfs,
+        pos)} from the pos_bin blobs."""
         import pyarrow.compute as pc
 
-        out: dict = {}
         if not tbl.num_rows:
-            return out
-        order = pc.sort_indices(
-            tbl,
-            sort_keys=[
-                ("term", "ascending"),
-                ("pid", "ascending"),
-                ("blk", "ascending"),
-            ],
-        )
-        tbl = tbl.take(order)
-        has_blobs = "tfs_bin" in tbl.column_names
-        terms = np.asarray(tbl["term"].to_pylist(), dtype=object)
-        pids = tbl["pid"].to_numpy().astype(np.int64)
-        ns = tbl["n"].to_numpy().astype(np.int64)
-        ids_bins = tbl["ids_bin"].to_pylist()
-        tfs_bins = tbl["tfs_bin"].to_pylist() if has_blobs else None
-        if positions:
-            third_bins = tbl["pos_bin"].to_pylist()
-        else:
-            third_bins = tbl["dls_bin"].to_pylist() if has_blobs else None
-        bnd = np.flatnonzero(terms[1:] != terms[:-1]) + 1
-        starts = np.concatenate(([0], bnd, [len(terms)]))
-        for gi in range(len(starts) - 1):
-            s, e = int(starts[gi]), int(starts[gi + 1])
-            t = terms[s]
-            # ONE varint decode per term over the concatenated blobs,
-            # then vectorized per-block rebase to absolute composite ids
-            # (first gap of each block is absolute within its pid)
-            gaps = decode_varint(b"".join(ids_bins[s:e]))
-            acc = np.cumsum(gaps)
-            row_n = ns[s:e]
-            rs = np.zeros(e - s, dtype=np.int64)
-            np.cumsum(row_n[:-1], out=rs[1:])
-            base = acc[rs] - gaps[rs] - (pids[s:e] << 32)
-            cids = acc - np.repeat(base, row_n)
-            tfs = (
-                decode_varint(b"".join(tfs_bins[s:e]))
-                if has_blobs else cids
+            return {}
+        tbl = tbl.take(
+            pc.sort_indices(
+                tbl,
+                sort_keys=[
+                    ("term", "ascending"),
+                    ("pid", "ascending"),
+                    ("blk", "ascending"),
+                ],
             )
-            if positions:
-                third = decode_grouped_deltas(
-                    b"".join(third_bins[s:e]), tfs
-                )
-            else:
-                third = (
-                    decode_varint(b"".join(third_bins[s:e]))
-                    if has_blobs else cids
-                )
-            out[t] = (cids, tfs, third)
-        return out
+        )
+        has_blobs = "tfs_bin" in tbl.column_names
+        return _decode_blocks(
+            np.asarray(tbl["term"].to_pylist(), dtype=object),
+            tbl["pid"].to_numpy().astype(np.int64),
+            tbl["n"].to_numpy().astype(np.int64),
+            tbl["ids_bin"].to_pylist(),
+            tbl["tfs_bin"].to_pylist() if has_blobs else None,
+            tbl["pos_bin" if positions else "dls_bin"].to_pylist()
+            if has_blobs else None,
+            positions,
+        )
 
     _EMPTY_POSTINGS = (
         np.empty(0, dtype=np.int64),
@@ -4036,8 +3846,9 @@ class SearchEngine(FeatureOpsMixin):
             term_cids[t], term_tfs[t], term_dls[t] = c, f, d
         return term_cids, term_tfs, term_dls
 
-    # Engage serving-path block-max only past this many fetched postings
-    # and this many cells (pruning needs cells to skip). MEASURED OFF BY
+    # Engage block-max (both routes: per query on the serving node, per
+    # task on the kernel) only past this many fetched postings and this
+    # many cells (pruning needs cells to skip). MEASURED OFF BY
     # DEFAULT: on the homogeneous synthetic corpus zero cells ever prune
     # -- every block holds a near-max-tf doc of every head term, so no
     # cell bound falls under theta -- while the metadata + subset-slice
@@ -4054,230 +3865,24 @@ class SearchEngine(FeatureOpsMixin):
         strategy: str = "tfidf",
     ) -> list:
         """Answer a bounded query on the serving node: pyarrow row-group-
-        pruned reads + one vectorized NumPy pass over composite
-        (pid << 32 | doc_id) ids -- no per-pid loop, no Spark job. Exact
-        and rank-identical to the distributed kernel (same tree evaluator,
-        same sorted-term float64 summation order).
-
-        With `use_blockmax`, wide scoring queries run the SAME exact
-        block-max two-phase pruning as the distributed kernel, in
-        composite-id space: posting cells (pid, doc_id // block_span) are
-        doc-range aligned across terms, so scoring a cell subset is exact
-        for the docs it contains and cells whose summed term upper bound
-        cannot reach the phase-1 theta are skipped entirely (the WAND
-        upgrade of miru's atomized-container skipping, here applied to
-        the serving node's memory-resident postings). Small queries stay
-        exhaustive -- the metadata pass would cost more than it saves.
-        Returns [(url, warc_us, pid, doc_id, score)] sorted
-        (score desc, pid, doc_id), length <= k."""
+        pruned reads + the shared evaluator over composite (pid << 32 |
+        doc_id) ids -- no per-pid loop, no Spark job, rank- and
+        score-identical to the distributed route by construction.
+        Records the block-max cell stats, when it engaged, on
+        self._local_blockmax_stats. Returns [(url, warc_us, pid, doc_id,
+        score)] sorted (score desc, pid, doc_id) -- newest-first for
+        strategy="time" -- length <= k."""
         if k <= 0:
             return []
-        dset = self._dataset()
-
-        term_cids, term_tfs, term_dls = self._postings_maps(
-            prep["fetch_terms"], prep["pid_range"]
+        cids, scores, stats = _evaluate(
+            self._topk_plan(prep, k, use_blockmax, strategy),
+            self._local_inputs(prep),
         )
-
-        term_pos: dict = {}
-        if prep.get("phrase_terms"):
-            # phrase members re-fetch WITH pos blobs, bypassing the LRU
-            # (position arrays are the largest per-term payload; keeping
-            # them out of the cache keeps its budget meaningful)
-            term_pos = self._decode_posting_table(
-                self._fetch_posting_rows(
-                    prep["phrase_terms"],
-                    prep["pid_range"],
-                    ["pid", "term", "blk", "n", "ids_bin", "tfs_bin",
-                     "pos_bin"],
-                ),
-                positions=True,
-            )
-
-        bounds = self._local_bounds(prep, dset)
-
-        if prep["has_all_node"]:
-            spans = []
-            for p in prep["relevant_pids"]:
-                n = int(self.pid_counts.get(p, 0))
-                lo, hi = bounds.get(int(p), (0, n))
-                lo, hi = max(lo, 0), min(hi, n)
-                if hi > lo:
-                    spans.append((int(p) << 32) + np.arange(lo, hi))
-            universe = (
-                np.concatenate(spans) if spans
-                else np.empty(0, dtype=np.int64)
-            )
-        else:
-            universe = np.empty(0, dtype=np.int64)
-
-        idf = prep["idf_map"] or {}
-        scoring_terms = prep["scoring_terms"]
-        rem = self._removed_comp
-
-        def eval_and_score(cmap, fmap, dmap):
-            """Exact match + score over (a cell-aligned subset of) the
-            fetched postings: filter tree, boundary-pid time mask,
-            tombstone mask, then sorted-term float64 accumulation --
-            per-doc sums are independent of which OTHER docs are in the
-            subset, so subset scores equal full-scan scores exactly."""
-            matches = _eval_tree(
-                prep["tree"], cmap, prep["expansions"], universe, term_pos
-            )
-            # exact boundary-pid time mask (interior pids wholly inside)
-            for p, (lo, hi) in bounds.items():
-                if not matches.size:
-                    break
-                s = np.searchsorted(matches, p << 32)
-                e = np.searchsorted(matches, (p + 1) << 32)
-                kl = np.searchsorted(matches, (p << 32) + lo)
-                kh = np.searchsorted(matches, (p << 32) + hi)
-                matches = np.concatenate(
-                    (matches[:s], matches[kl:kh], matches[e:])
-                )
-            if rem is not None and rem.size and matches.size:
-                pos = np.minimum(
-                    np.searchsorted(rem, matches), rem.size - 1
-                )
-                matches = matches[rem[pos] != matches]
-            if matches.size == 0 or strategy == "time":
-                return matches, np.zeros(matches.size, dtype=np.float64)
-            scores = np.zeros(matches.size, dtype=np.float64)
-            for t in scoring_terms:
-                cids = cmap.get(t)
-                if cids is None or cids.size == 0:
-                    continue
-                _accumulate_term(
-                    scores, matches, cids, fmap[t], dmap[t],
-                    idf.get(t, 0.0), self.avgdl,
-                )
-            return matches, scores
-
-        n_postings = sum(c.size for c in term_cids.values())
-        if (
-            use_blockmax
-            and strategy != "time"
-            and not prep["has_all_node"]
-            # _blockmax_local's slice_to cannot slice the self-contained
-            # phrase position triples; phrase queries stay exhaustive
-            and not term_pos
-            and scoring_terms
-            and n_postings >= self.LOCAL_BLOCKMAX_MIN_POSTINGS
-        ):
-            matches, scores = self._blockmax_local(
-                term_cids, term_tfs, term_dls, eval_and_score,
-                set(scoring_terms), idf, k,
-            )
-        else:
-            matches, scores = eval_and_score(
-                term_cids, term_tfs, term_dls
-            )
-        if matches.size == 0:
-            return []
-
-        if strategy == "time":
-            # newest-k: matches is ascending composite (pid<<32|doc_id),
-            # which IS global time order (pids are time buckets, docIDs
-            # minted in warc order within each pid)
-            take = matches[-k:][::-1] if k > 0 else matches[:0]
-            w_pids = (take >> 32).astype(np.int64)
-            w_docs = (take & 0xFFFFFFFF).astype(np.int64)
-            return self._gather_rows(dset, w_pids, w_docs,
-                                     np.zeros(take.size, dtype=np.float64))
-
-        w_pids = (matches >> 32).astype(np.int64)
-        w_docs = (matches & 0xFFFFFFFF).astype(np.int64)
-        order = np.lexsort((w_docs, w_pids, -scores))
-        if k > 0:
-            order = order[:k]
-        if order.size == 0:
-            return []
+        if stats is not None:
+            self._local_blockmax_stats = stats
         return self._gather_rows(
-            dset, w_pids[order], w_docs[order], scores[order]
+            self._dataset(), cids >> 32, cids & 0xFFFFFFFF, scores
         )
-
-    def _blockmax_local(
-        self, cmap, fmap, dmap, scorer, scoring_set, idf, k
-    ):
-        """Exact two-phase block-max over composite-id cells (the
-        serving-node twin of the kernel's pruning, engine.py kernel():
-        same admissibility argument). Phase 1 scores the highest-upper-
-        bound cells until k docs survive the masks -> theta (a lower
-        bound on the true k-th score, since subset scores are exact);
-        phase 2 scores every cell whose bound can reach theta. Docs in
-        skipped cells are bounded strictly below theta and can never
-        enter the top-k. Cells carrying only filter-term postings ride
-        along with bound 0 so zero-score matches stay reachable (same as
-        the kernel's blk_ub rows). Records pruning stats on
-        self._local_blockmax_stats for tests/telemetry."""
-        span = int(self.meta.get("block_span", 1 << 30))
-        term_cells: dict = {}
-        key_parts: list = []
-        ub_parts: list = []
-        for t, c in cmap.items():
-            if c.size == 0:
-                continue
-            cells = ((c >> 32) << 32) | ((c & 0xFFFFFFFF) // span)
-            term_cells[t] = cells
-            bnd = np.flatnonzero(cells[1:] != cells[:-1]) + 1
-            starts = np.concatenate(([0], bnd))
-            keys = cells[starts]
-            idf_t = idf.get(t, 0.0)
-            if t in scoring_set and idf_t > 0.0:
-                mt = np.maximum.reduceat(fmap[t], starts)
-                md = np.minimum.reduceat(dmap[t], starts)
-                ub = idf_t * _bm25_tf_part(
-                    mt.astype(np.float64), md.astype(np.float64),
-                    self.avgdl,
-                )
-            else:
-                ub = np.zeros(keys.size, dtype=np.float64)
-            key_parts.append(keys)
-            ub_parts.append(ub)
-        if not key_parts:
-            return scorer(cmap, fmap, dmap)
-        all_keys = np.concatenate(key_parts)
-        uq, inv = np.unique(all_keys, return_inverse=True)
-        if uq.size < self.LOCAL_BLOCKMAX_MIN_CELLS:
-            return scorer(cmap, fmap, dmap)
-        ub_sum = np.zeros(uq.size, dtype=np.float64)
-        np.add.at(ub_sum, inv, np.concatenate(ub_parts))
-        desc = np.argsort(-ub_sum, kind="stable")
-
-        def slice_to(chosen):  # chosen: sorted unique cell keys
-            cm, fm, dm = {}, {}, {}
-            for t, cells in term_cells.items():
-                pos = np.minimum(
-                    np.searchsorted(chosen, cells), chosen.size - 1
-                )
-                mask = chosen[pos] == cells
-                if not mask.any():
-                    continue
-                cm[t] = cmap[t][mask]
-                # filter-only terms alias tfs/dls to the cids array
-                fm[t] = cm[t] if fmap[t] is cmap[t] else fmap[t][mask]
-                dm[t] = cm[t] if dmap[t] is cmap[t] else dmap[t][mask]
-            return cm, fm, dm
-
-        m = min(4, uq.size)
-        while True:
-            chosen = np.sort(uq[desc[:m]])
-            matches, scores = scorer(*slice_to(chosen))
-            if matches.size >= k or m >= uq.size:
-                break
-            m = min(m * 4, uq.size)
-        scored_n = m
-        if matches.size >= k:
-            theta = -np.partition(-scores, k - 1)[k - 1]
-            cand = uq[ub_sum >= theta]
-            full = np.unique(np.concatenate((cand, uq[desc[:m]])))
-            if full.size > m:
-                matches, scores = scorer(*slice_to(full))
-            scored_n = full.size
-        self._local_blockmax_stats = {
-            "cells_total": int(uq.size),
-            "cells_scored": int(scored_n),
-        }
-        return matches, scores
 
     def _gather_rows(self, dset, w_pids, w_docs, w_scores) -> list:
         """Forward-index point gather (FullText.gatherValues analog):
@@ -4343,13 +3948,15 @@ class SearchEngine(FeatureOpsMixin):
         volume fits `local_max_postings` run on the serving node itself
         (`_search_local`, zero Spark jobs -- the reference's
         route-to-partition-host topology); larger queries run the
-        distributed path below.
+        distributed path below. Both routes run the same evaluator
+        (`_evaluate`), so they answer rank- and score-identically.
 
         Distributed path -- plans ONE Spark job on the pinned-dictionary
         path: prefix expansion is a driver bisect, idf a driver dict,
-        time bounds resolve kernel-side from 't' rows, and match-all pids
-        reach the kernel via tiny marker rows -- no per-query metadata
-        jobs. Job 1: kernel + bounded top-k merge (TakeOrdered) -> k rows
+        time bounds resolve in-task from 't' rows, and match-all pids
+        reach the tasks via tiny marker rows -- no per-query metadata
+        jobs. Job 1: per-task evaluator (`_topk_runner`) + bounded top-k
+        merge (TakeOrdered) -> k rows
         on the driver. Job 2 (at the caller's collect): point-lookup
         gather of display fields -- the k (pid, doc_id) winners as
         pushed-down isin predicates over the forward index, exact-joined
@@ -4365,9 +3972,9 @@ class SearchEngine(FeatureOpsMixin):
             local = self._local_eligible(prep)
         elif local and not self._local_eligible(prep):
             # forcing the serving-node path when it can't answer this
-            # query correctly (unpinned dictionary/tombstones, format-1
-            # time bounds, oversized posting volume) must fail loudly,
-            # not return silently-wrong results
+            # query correctly (unpinned dictionary/tombstones, oversized
+            # posting volume) must fail loudly, not return
+            # silently-wrong results
             raise ValueError(
                 "local=True forced but this query is not eligible for "
                 "the serving-node path; use local=None for auto-routing"
@@ -4385,22 +3992,9 @@ class SearchEngine(FeatureOpsMixin):
                 ),
                 query, locale, highlight_from, use_stopwords,
             )
-        # the theta seed feeds ONLY the per-pid block-max kernel; plain
-        # scoring searches dispatch to the task-level composite kernel
-        # (exhaustive, ignores theta0), so seeding them is pure dead
-        # work on the serving node -- seed only the shapes that read it
-        composite_route = (
-            not prep["has_all_node"]
-            and not (prep.get("phrase_terms") or [])
-            and not (
-                self._removed_df is not None and self._removed_map is None
-            )
-        )
-        theta0 = (
-            self._theta_seed(prep, k)
-            if use_blockmax and not composite_route
-            else 0.0
-        )
+        # the seed is serving-node work that only block-max reads:
+        # _theta_seed returns 0.0 unless the evaluator's gate can engage
+        theta0 = self._theta_seed(prep, k) if use_blockmax else 0.0
         per_part = self.kernel_frame(
             query, k=k, locale=locale, time_range_us=time_range_us,
             use_blockmax=use_blockmax, prep=prep, theta0=theta0,
@@ -4573,15 +4167,16 @@ class SearchEngine(FeatureOpsMixin):
     ) -> dict[str, list]:
         """Batch N queries into ONE Spark job (the qps path -- the
         reference's stress harness fires queries concurrently,
-        WikiMiruStressService.java:58-120). Each (query, pid) group runs
-        the same kernel as `search`; per-query results are identical to
-        sequential `search_collect` calls.
+        WikiMiruStressService.java:58-120). Each task groups its rows by
+        query and runs the same evaluator as `search` once per query;
+        per-query results are identical to sequential `search_collect`
+        calls.
 
         Returns {query: [(pid, doc_id, score, url), ...]}.
         """
         import pandas as pd
 
-        specs = []       # per-qid (tree, scoring_terms, expansions)
+        plans: dict = {}  # qid -> _TopK of the batched queries
         fallback = {}    # queries with match-all nodes -> individual path
         qterm_rows = []  # (qid, term)
         fetch_all: set = set()
@@ -4602,43 +4197,26 @@ class SearchEngine(FeatureOpsMixin):
                 # unpinned tombstones need per-query 'x'-row co-partition;
                 # route through the individual kernel path
                 fallback[q] = None
-                specs.append(None)
                 continue
             if self._local_eligible(prep):
                 # bounded query: answer on the serving node, no job
                 rows = self._search_local(prep, k, use_blockmax)
                 out[q] = [(p, d, s, u) for (u, _w, p, d, s) in rows]
-                specs.append(None)
                 continue
-            batch_time_ok = (
-                prep["time_spec"] is None
-                and prep["time_bounds"] is None
-                and prep["pid_range"] is None
-            )
-            if ret_us > 0 and prep["time_bounds"] is None:
-                # format>=2 retention clamp: identical spec for every
-                # query in the batch, carried on the shared exchange
+            if ret_us > 0:
+                # retention clamp: identical spec for every query in the
+                # batch, carried on the shared exchange
                 shared_spec = prep["time_spec"]
                 shared_boundary = prep["boundary_pids"]
                 shared_pid_range = prep["pid_range"]
-                batch_time_ok = True
-            if (
-                prep["has_all_node"]
-                or prep.get("phrase_terms")
-                or not batch_time_ok
-            ):
-                # match-all needs marker rows, phrases need pos blobs,
-                # and per-query/format-1 time bounds need their own
-                # pid/bounds spec -- the shared batched exchange carries
-                # none of these, so these answer through the individual
-                # kernel path where results stay identical to sequential
-                # search_collect
+            if prep["has_all_node"] or prep.get("phrase_terms"):
+                # match-all needs marker rows and phrases need pos blobs
+                # -- the shared batched exchange carries neither, so
+                # these answer through the individual kernel path where
+                # results stay identical to sequential search_collect
                 fallback[q] = None
-                specs.append(None)
                 continue
-            specs.append(
-                (prep["tree"], prep["scoring_terms"], prep["expansions"])
-            )
+            plans[qid] = self._topk_plan(prep, k, use_blockmax)
             fetch_all.update(prep["fetch_terms"])
             qterm_rows.extend((qid, t) for t in prep["fetch_terms"])
 
@@ -4664,9 +4242,8 @@ class SearchEngine(FeatureOpsMixin):
         # their tf/dl blobs before the exchange (same saving as the
         # single-query kernel path)
         scoring_all: set = set()
-        for spec in specs:
-            if spec is not None:
-                scoring_all.update(spec[1])
+        for plan in plans.values():
+            scoring_all.update(plan.scoring_terms)
         nonscoring_all = fetch_all - scoring_all
         if nonscoring_all:
             keep = F.col("term").isin(sorted(scoring_all))
@@ -4695,10 +4272,10 @@ class SearchEngine(FeatureOpsMixin):
         )
         if shared_spec is not None and shared_boundary:
             # the shared retention boundary pid's 't' rows ride to EVERY
-            # batched query's (qid, pid) group so each kernel resolves
+            # batched query's rows so each query's evaluator resolves
             # the same exact [lo, hi) interval in-task (one boundary pid
             # x n_queries tiny rows -- broadcast-sized)
-            bq = [int(i) for i, s in enumerate(specs) if s is not None]
+            bq = sorted(plans)
             trows = _pad_cols(
                 self.timeindex.filter(F.col("pid").isin(shared_boundary)),
                 kcols,
@@ -4712,48 +4289,19 @@ class SearchEngine(FeatureOpsMixin):
             )
             tagged = tagged.unionByName(trows)
 
-        n_docs, avgdl, pid_counts = self.n_docs, self.avgdl, self.pid_counts
-        idf_map = None
-        if pinned:
-            # one shared map over the union fetch set; each kernel reads
-            # only its own scoring terms from it
-            idf_map = {
-                t: bm25_idf(n_docs, self._term_df[t])
-                for t in fetch_all
-                if t in self._term_df
-            }
-        kernels = {}
-        for qid, spec in enumerate(specs):
-            if spec is None:
-                continue
-            tree, scoring, expansions = spec
-            kernels[qid] = _make_kernel(
-                tree, scoring, n_docs, avgdl, k, pid_counts,
-                expansions, None, use_blockmax, idf_map=idf_map,
-                time_spec=shared_spec,
-                removed_map=self._removed_map,
-            )
-
-        def dispatch(batches):
-            dfs = [b for b in batches if len(b)]
-            if not dfs:
-                return
-            pdf = pd.concat(dfs, ignore_index=True)
-            for (qid, _pid), grp in pdf.groupby(["qid", "pid"], sort=False):
-                res = kernels[int(qid)](grp.drop(columns=["qid"]))
-                if len(res):
-                    res.insert(0, "qid", int(qid))
-                    yield res
-
         nparts = max(
             1,
             min(
-                len(kernels) * max(len(self.pid_counts), 1),
+                len(plans) * max(len(self.pid_counts), 1),
                 self.spark.sparkContext.defaultParallelism,
             ),
         )
         per = tagged.repartition(nparts, "qid", "pid").mapInPandas(
-            dispatch, "qid int, pid long, doc_id long, score double"
+            _topk_runner(
+                plans, self.n_docs, self.pid_counts, shared_spec,
+                self._removed_comp,
+            ),
+            "qid int, pid long, doc_id long, score double",
         )
         w = Window.partitionBy("qid").orderBy(
             F.desc("score"), F.asc("pid"), F.asc("doc_id")
@@ -4777,7 +4325,11 @@ class SearchEngine(FeatureOpsMixin):
                 self._dataset(), pids_a, docs_a,
                 np.zeros(len(trows), dtype=np.float64),
             )
-            url_of = {(p, d): u for u, _w, p, d, _s in gathered}
+            # a docmap miss gathers as url None: leave it out so the row
+            # drops below, exactly as the fallback's inner join drops it
+            url_of = {
+                (p, d): u for u, _w, p, d, _s in gathered if u is not None
+            }
         except Exception:
             url_of = None
         by_qid: dict[int, list] = {}
@@ -4785,7 +4337,7 @@ class SearchEngine(FeatureOpsMixin):
             for r in trows:
                 key = (int(r["pid"]), int(r["doc_id"]))
                 if key not in url_of:
-                    continue  # same drop the docmap inner join makes
+                    continue
                 by_qid.setdefault(int(r["qid"]), []).append(
                     (r["rn"], r["pid"], r["doc_id"], r["score"],
                      url_of[key])
@@ -4802,7 +4354,7 @@ class SearchEngine(FeatureOpsMixin):
                      r["url"])
                 )
         for qid, q in enumerate(queries):
-            if specs[qid] is None:
+            if qid not in plans:
                 continue
             rows = sorted(by_qid.get(qid, []))
             out[q] = [(p, d, s, u) for _rn, p, d, s, u in rows]

@@ -70,11 +70,18 @@ def test_explain_distributed_route_reasons(eng):
         # plain scoring search: the composite task kernel (exhaustive)
         assert rep["kernel"] == "composite-task"
         assert "composite" in rep["blockmax"]
-        # match-all shapes stay on the per-pid kernel
-        rep_all = eng.explain(None, constraints="lang:de")
-        if rep_all["route"] == "distributed-kernel":
-            assert rep_all["kernel"] == "per-pid"
-            assert "block-max" in rep_all["blockmax"]
+        # every distributed scoring shape runs the one evaluator:
+        # match-all and time-ranged included
+        t0 = 1704067200_000_000
+        for rep_x in (
+            eng.explain(None, constraints="lang:de"),
+            eng.explain(
+                "w000001", time_range_us=(t0, t0 + PSEC * 1_000_000 - 1)
+            ),
+        ):
+            assert rep_x["route"] == "distributed-kernel"
+            assert rep_x["kernel"] == "composite-task"
+            assert "block-max" in rep_x["blockmax"]
     finally:
         eng.local_max_postings = old
     # serving-node route: no kernel flavor

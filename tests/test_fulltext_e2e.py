@@ -170,52 +170,48 @@ def fine_engine(spark, tmp_path_factory):
 
 
 @pytest.mark.parametrize("query,k", [("w000007", 3), ("w000009 OR w000033", 3)])
-def test_theta_seed_prunes_blocks(fine_engine, query, k):
+def test_theta_seed_prunes_blocks(fine_engine, query, k, monkeypatch):
     """Cross-partition theta: the driver-computed seed (k-th score of
     the densest pid, obtained job-free on the serving node) must leave
-    the merged top-k identical while scoring strictly fewer blocks
-    across the other pids."""
-    import pandas as pd
-    from pyspark.sql import functions as F
+    the merged top-k of the shared block-max identical while scoring
+    strictly fewer cells across the pids. Each pid is evaluated alone,
+    as a kernel task holding one pid would be."""
+    import numpy as np
 
-    from miru_spark.query.engine import _make_kernel
+    from miru_spark.query.engine import _evaluate
 
     engine = fine_engine
+    # the seed runs only where block-max engages: lower the gate
+    monkeypatch.setattr(engine, "LOCAL_BLOCKMAX_MIN_POSTINGS", 0)
     prep = engine._prep_query(query, None, None)
     theta0 = engine._theta_seed(prep, k)
     assert theta0 > 0.0
 
-    pdf = (
-        engine.postings.filter(F.col("term").isin(prep["fetch_terms"]))
-        .toPandas()
-    )
+    inp = engine._local_inputs(prep)
     results = {}
-    counters = {}
+    cells = {}
     for name, seed in (("no_seed", 0.0), ("seeded", theta0)):
-        counter = {}
-        kern = _make_kernel(
-            prep["tree"], prep["scoring_terms"], engine.n_docs,
-            engine.avgdl, k, engine.pid_counts, prep["expansions"],
-            None, True, idf_map=prep["idf_map"], theta0=seed,
-            counter=counter,
+        # min_cells=1: a test-sized pid has only a handful of cells
+        q = engine._topk_plan(prep, k, True, theta0=seed)._replace(
+            blockmax=(engine.meta["block_span"], 0, 1)
         )
-        outs = [
-            kern(grp) for _pid, grp in pdf.groupby("pid", sort=True)
-        ]
-        allr = pd.concat([o for o in outs if len(o)], ignore_index=True)
-        top = allr.sort_values(
-            ["score", "pid", "doc_id"], ascending=[False, True, True]
-        ).head(k)
-        results[name] = list(
-            zip(top["pid"].tolist(), top["doc_id"].tolist(),
-                [round(s, 9) for s in top["score"].tolist()])
-        )
-        counters[name] = counter
+        rows, scored = [], 0
+        for pid in sorted(engine.pid_counts):
+            post = {}
+            for t, (c, f, d) in inp.post.items():
+                s, e = np.searchsorted(c, [pid << 32, (pid + 1) << 32])
+                if e > s:
+                    post[t] = (c[s:e], f[s:e], d[s:e])
+            cids, scores, stats = _evaluate(q, inp._replace(post=post))
+            scored += stats["cells_scored"] if stats else 0
+            rows += [
+                (int(c >> 32), int(c & 0xFFFFFFFF), round(float(sc), 9))
+                for c, sc in zip(cids, scores)
+            ]
+        results[name] = sorted(rows, key=lambda r: (-r[2], r[0], r[1]))[:k]
+        cells[name] = scored
     assert results["seeded"] == results["no_seed"]
-    assert (
-        counters["seeded"]["blocks_scored"]
-        < counters["no_seed"]["blocks_scored"]
-    ), counters
+    assert cells["seeded"] < cells["no_seed"], cells
 
 
 def test_theta_seeded_distributed_equals_local(fine_engine):

@@ -85,9 +85,9 @@ def test_newest_fallback_is_ordered(eng, monkeypatch):
 
 def test_kernel_block_recency_prune_engages_and_is_exact(eng, monkeypatch):
     """considerIfLastIdGreaterThanN analog (LabFieldIndex.multiTxIndex
-    :339-419): with doc-range bounds the kernel drops posting blocks
-    whose span misses [lo, hi) BEFORE decode. Identical results, fewer
-    varint decodes."""
+    :339-419): when a boundary pid's 't' rows bound its docIDs to
+    [lo, hi), the kernel task drops posting blocks whose span misses the
+    interval BEFORE decode. Identical results, fewer blocks decoded."""
     import numpy as np
     import pandas as pd
 
@@ -102,31 +102,39 @@ def test_kernel_block_recency_prune_engages_and_is_exact(eng, monkeypatch):
     )
     assert len(pdf) >= 3, "need a multi-block term for the scenario"
     pdf["rk"] = "p"
-    n = int(eng.pid_counts[pid])
+    trows = eng.timeindex.filter(E.F.col("pid") == pid).toPandas()
+    trows["rk"] = "t"
+    times = E._t_times(
+        trows["first_doc"].to_numpy(), trows["ids_bin"].to_numpy()
+    )
     lo = int(pdf["first_doc"].iloc[len(pdf) // 2])
-    bounds = {pid: (lo, n)}
+    # [times[lo], +inf) is exactly docIDs [lo, n) of this boundary pid
+    spec = (int(times[lo]), 1 << 62, pid, pid + 1)
 
-    calls = {"n": 0}
-    real = E.decode_postings
+    decoded = {"blocks": 0}
+    real = E._decode_blocks
 
-    def counting(b):
-        calls["n"] += 1
-        return real(b)
+    def counting(terms, *a, **kw):
+        decoded["blocks"] += len(terms)
+        return real(terms, *a, **kw)
 
-    monkeypatch.setattr(E, "decode_postings", counting)
+    monkeypatch.setattr(E, "_decode_blocks", counting)
 
-    def run(tb):
-        return E._make_kernel(
-            ("term", "w000001"), ["w000001"], eng.n_docs, eng.avgdl,
-            0, eng.pid_counts, {}, tb, False,
-            idf_map={"w000001": 1.0},
-        )(pdf.copy())
+    def run(time_spec):
+        q = E._TopK(("term", "w000001"), {}, ["w000001"],
+                    {"w000001": 1.0}, eng.avgdl, 0)
+        rows = pd.concat([pdf, trows], ignore_index=True)
+        out = list(E._topk_runner({0: q}, eng.n_docs, eng.pid_counts,
+                                  time_spec, None)([rows]))
+        return pd.concat(out, ignore_index=True).sort_values(
+            "doc_id", ignore_index=True
+        )
 
     unbounded = run(None)
-    n_unbounded = calls["n"]
-    calls["n"] = 0
-    bounded = run(bounds)
-    n_bounded = calls["n"]
+    n_unbounded = decoded["blocks"]
+    decoded["blocks"] = 0
+    bounded = run(spec)
+    n_bounded = decoded["blocks"]
     assert n_bounded < n_unbounded  # blocks below lo never decoded
     want = unbounded[unbounded["doc_id"] >= lo].reset_index(drop=True)
     got = bounded.reset_index(drop=True)
