@@ -113,6 +113,20 @@ def _pad_cols(df: DataFrame, cols: list[str], rk: str) -> DataFrame:
     )
 
 
+def _by_task(df: DataFrame, n: int, *keys: str) -> DataFrame:
+    """Lay a kernel input out over `n` Python tasks: one task reads
+    everything through a narrow coalesce (one stage, no exchange, every
+    key trivially co-located); more tasks hash-repartition on `keys`."""
+    return df.coalesce(1) if n == 1 else df.repartition(n, *keys)
+
+
+class _DenseTerms(list):
+    """A sorted term list known to cover at least half of its term-
+    dictionary span (a whole-field enumeration, or a presence-narrowed
+    one that kept half its values) -- the only lists an UNPINNED
+    dictionary may select by term range (`SearchEngine._range_dense`)."""
+
+
 def _bm25_tf_part(tf, dl, avgdl: float):
     return tf * (K1 + 1.0) / (tf + K1 * (1.0 - B + B * dl / avgdl))
 
@@ -1341,20 +1355,22 @@ class SearchEngine(FeatureOpsMixin):
         return self._postings_pos
 
     def _range_dense(self, g: list) -> bool:
-        """Does the sorted term group cover at least half the pinned
-        dictionary's [g[0], g[-1]] span? Dense groups range-select;
-        sparse ones (floored enumerations) keep exact isin so their
-        holes' postings never ship. Unpinned dictionaries only produce
-        whole-field enumerations here -- dense by construction."""
+        """Does the term group cover at least half the dictionary's
+        [min(g), max(g)] span? Dense groups range-select; sparse ones
+        (floored enumerations, explicit value lists) keep exact isin so
+        their holes' postings never ship. An unpinned dictionary cannot
+        measure the span without a Spark job, so there only groups known
+        dense by construction (`_DenseTerms`: whole-field enumerations)
+        range-select."""
         ts = self._terms_sorted
         if ts is None:
-            return True
+            return isinstance(g, _DenseTerms)
         import bisect
 
-        span = bisect.bisect_right(ts, g[-1]) - bisect.bisect_left(
-            ts, g[0]
+        span = bisect.bisect_right(ts, max(g)) - bisect.bisect_left(
+            ts, min(g)
         )
-        return 2 * len(g) >= span
+        return 2 * len(set(g)) >= span
 
     def _prefix_scan(
         self, prefix: str, cap: int | None, min_df: int = 0
@@ -1451,7 +1467,9 @@ class SearchEngine(FeatureOpsMixin):
             .orderBy("term")
             .collect()
         )
-        return [r["term"] for r in rows]
+        out = [r["term"] for r in rows]
+        # one unfloored prefix: the whole contiguous dictionary range
+        return _DenseTerms(out) if len(keys) == 1 and min_df <= 0 else out
 
     def expand_range(
         self, field: str, lo: int, hi: int, cap: int | None = None
@@ -1496,16 +1514,13 @@ class SearchEngine(FeatureOpsMixin):
         (LabInvertedIndex reads). The postings are hash-co-located by pid
         BEFORE caching, so interactive queries skip their per-query
         repartition shuffle: a filter on the cached, already-partitioned
-        data feeds mapInPandas directly (one stage, no exchange).
-        Returns self."""
-        nparts = max(
-            1,
-            min(
-                len(self.pid_counts) or 1,
-                self.spark.sparkContext.defaultParallelism,
-            ),
-        )
-        self.postings = self.postings.repartition(nparts, "pid").cache()
+        data feeds mapInPandas directly (one stage, no exchange), narrowed
+        by a coalesce to the query's sized task count (`_kernel_tasks`;
+        whole partitions merge, so co-location survives). The cache holds
+        the full fan-out, min(pids, cores) partitions. Returns self."""
+        self.postings = self.postings.repartition(
+            self._kernel_tasks(1 << 62, len(self.pid_counts)), "pid"
+        ).cache()
         self._pid_colocated = True
         self.termstats = self.termstats.cache()
         self.docmap = self.docmap.cache()
@@ -1739,11 +1754,9 @@ class SearchEngine(FeatureOpsMixin):
                    "pairs"):
             for g in (facet_terms, facet_terms2, facet_terms3):
                 if g:
-                    facet_groups.append(sorted(set(g)))
+                    facet_groups.append(g)
             for _off, groups in tuple_specs or []:
-                for g in groups:
-                    if g:
-                        facet_groups.append(sorted(set(g)))
+                facet_groups.extend(g for g in groups if g)
         has_all_node = p["has_all_node"]
         relevant_pids = p["relevant_pids"]
         time_spec = p["time_spec"]
@@ -1776,13 +1789,15 @@ class SearchEngine(FeatureOpsMixin):
             # on their term min/max like the isin path)
             fcond = fcond | F.col("term").startswith(kp)
         for g in facet_groups:
-            if len(g) <= self.FACET_ISIN_MAX or not self._range_dense(g):
+            sg = sorted(set(g))
+            if len(sg) <= self.FACET_ISIN_MAX or not self._range_dense(g):
                 # exact list selection; above the isin threshold only a
-                # SPARSE group (e.g. a min_df-floored enumeration whose
-                # holes would make a range over-fetch most of the field)
-                # still pays the big InSet -- correctness of the cost
-                # knob beats plan size
-                fcond = fcond | F.col("term").isin(g)
+                # SPARSE group (a min_df-floored enumeration, or any
+                # explicit list on an unpinned dictionary, whose holes
+                # would make a range over-fetch most of the field) still
+                # pays the big InSet -- correctness of the cost knob
+                # beats plan size
+                fcond = fcond | F.col("term").isin(sg)
             else:
                 # wide DENSE value list (uncapped field enumeration): a
                 # million-literal Catalyst In would blow up planning, so
@@ -1791,7 +1806,7 @@ class SearchEngine(FeatureOpsMixin):
                 # outside the exact list ride along and are ignored by
                 # the kernel's per-group lists
                 fcond = fcond | (
-                    (F.col("term") >= g[0]) & (F.col("term") <= g[-1])
+                    (F.col("term") >= sg[0]) & (F.col("term") <= sg[-1])
                 )
         blocks = blocks.filter(fcond)
 
@@ -1900,20 +1915,24 @@ class SearchEngine(FeatureOpsMixin):
                 )
             )
 
-        # hash-co-locate each pid's fetched blocks on one task, then ONE
-        # pandas call per task: the top-k runner evaluates all of the
-        # task's pids at once, the agg kernel loops the pids it owns --
-        # same semantics as groupBy(pid).applyInPandas but without a
-        # per-group Arrow+pandas round trip (a query touches O(pids)
-        # groups; at fine-grained time partitioning that per-group
-        # overhead dominated latency). Task count is bounded by the pids
-        # actually touched, not the session shuffle-partition default
-        # (which would schedule ~200 mostly empty tasks per interactive
-        # query).
+        # co-locate each pid's fetched blocks on one task, then ONE pandas
+        # call per task: the top-k runner evaluates all of the task's
+        # pids at once, the agg kernel loops the pids it owns -- same
+        # semantics as groupBy(pid).applyInPandas but without a per-group
+        # Arrow+pandas round trip (a query touches O(pids) groups; at
+        # fine-grained time partitioning that per-group overhead
+        # dominated latency). The task count is SIZED by the op's
+        # estimated postings (`_kernel_tasks`): every Python task costs a
+        # fixed start-up, so a small op runs as ONE task behind a
+        # coalesce -- one stage, no exchange, every pid trivially
+        # co-located -- and only ops worth several tasks' start-up
+        # repartition by pid, capped at the pids touched and the cores
+        # (miru likewise answers a small query on the one host holding
+        # its partition; only large scans fan out).
         # cached engines pre-co-located the postings by pid, so the plain
-        # term-query path needs NO exchange at all; unions (time-index /
-        # marker rows) or uncached reads fall back to a per-query
-        # repartition bounded by the pids touched
+        # term-query path needs NO exchange at any task count: a coalesce
+        # merges whole cached partitions. Unions (time-index / marker /
+        # tombstone rows) or uncached reads lay out per query (`_by_task`)
         plain = (
             not boundary_pids
             # waveform/metrics/waveforms/stumptown union time-index rows
@@ -1925,17 +1944,16 @@ class SearchEngine(FeatureOpsMixin):
             # was never pre-co-located by cache()
             and not phrase_terms
         )
+        n_tasks = self._kernel_tasks(
+            self._op_postings(
+                p, [t for g in facet_groups for t in g], facet_prefixes
+            ),
+            len(relevant_pids),
+        )
         if getattr(self, "_pid_colocated", False) and plain:
-            src = blocks
+            src = blocks.coalesce(n_tasks)
         else:
-            nparts = max(
-                1,
-                min(
-                    len(relevant_pids) or 1,
-                    self.spark.sparkContext.defaultParallelism,
-                ),
-            )
-            src = blocks.repartition(nparts, "pid")
+            src = _by_task(blocks, n_tasks, "pid")
         out_schema = ", ".join(
             f"{c} {_OUT_TYPES[c]}"
             for c in _kernel_columns(agg, facet_prefixes)
@@ -2192,6 +2210,35 @@ class SearchEngine(FeatureOpsMixin):
             )
         return est
 
+    def _op_postings(
+        self, prep: dict, facet_terms=None, facet_prefixes=None
+    ) -> int:
+        """Estimated postings one op reads: the query's own
+        (`_estimated_postings`) plus its facet postings -- the df of the
+        listed facet values, or for streamed `facet_prefixes` the df sum
+        over the pinned dictionary's prefix scan. The one estimate both
+        the serving budget and the kernel's task count read; an unpinned
+        dictionary keeps the unbounded 1 << 62."""
+        est = self._estimated_postings(prep)
+        df = self._term_df
+        if df is None:
+            return est
+        est += sum(df.get(t, 0) for t in facet_terms or [])
+        for kp in facet_prefixes or []:
+            est += sum(df[t] for t in self._prefix_scan(kp, None))
+        return est
+
+    def _kernel_tasks(self, est: int, keys: int) -> int:
+        """Python tasks for one kernel op: ceil(est /
+        KERNEL_TASK_MIN_POSTINGS), clamped to [1, min(keys, cores)] --
+        `keys` is the distinct partitioning keys the op touches (pids,
+        or (qid, pid) pairs for a batch). The single copy of the kernel
+        fan-out rule; `cache()` sizes its partitions by it at the
+        unbounded estimate."""
+        cap = min(keys, self.spark.sparkContext.defaultParallelism)
+        want = -(-int(est) // self.KERNEL_TASK_MIN_POSTINGS)
+        return max(1, min(cap, want))
+
     def _seed_eligible(self, prep: dict, k: int) -> bool:
         """Would a distributed search read a theta seed? Only when the
         evaluator's block-max can engage (a score-ranked, non-match-all,
@@ -2264,13 +2311,9 @@ class SearchEngine(FeatureOpsMixin):
         distributes (the streamed facet kernel needs no value list)."""
         eligible = pinned and self._local_eligible(prep)
         if local is None:
-            est_facets = sum(
-                (self._term_df or {}).get(t, 0)
-                for t in facet_terms or []
-            )
             return (
                 eligible
-                and self._estimated_postings(prep) + est_facets
+                and self._op_postings(prep, facet_terms)
                 <= self.local_max_postings
             )
         if local and not eligible:
@@ -2378,6 +2421,12 @@ class SearchEngine(FeatureOpsMixin):
             },
             "term_df_top": top_terms,
             "estimated_postings": int(est),
+            # Python tasks the distributed kernel plans for this query
+            # (also when forced with local=False), from
+            # estimated_postings: one task runs exchange-free
+            "kernel_tasks": self._kernel_tasks(
+                est, len(prep["relevant_pids"])
+            ),
             "local_max_postings": int(self.local_max_postings),
             "match_all": bool(prep["has_all_node"]),
             "phrase_terms": sorted(phrase_members),
@@ -2432,6 +2481,8 @@ class SearchEngine(FeatureOpsMixin):
             ),
         }
         if field is not None:
+            from ..fields import FIELD_SEP
+
             if self._terms_sorted is not None:
                 # UNCAPPED enumeration (field_terms): n_values is the
                 # field's true value count, never a dictionary cut
@@ -2452,6 +2503,14 @@ class SearchEngine(FeatureOpsMixin):
                 "truncated": False,
                 "cap": None,
                 "facet_postings": fest,
+                # streamed facet kernel: sized by the same estimate
+                # kernel_frame reads (query + the field's prefix scan)
+                "kernel_tasks": self._kernel_tasks(
+                    self._op_postings(
+                        prep, facet_prefixes=[f"{field}{FIELD_SEP}"]
+                    ),
+                    len(prep["relevant_pids"]),
+                ),
                 "route": (
                     "serving-node"
                     if local
@@ -3859,6 +3918,22 @@ class SearchEngine(FeatureOpsMixin):
     # it -- that spread is what block-max exists for.
     LOCAL_BLOCKMAX_MIN_POSTINGS = 1 << 62
     LOCAL_BLOCKMAX_MIN_CELLS = 16
+    # Estimated postings one kernel-route Python task is planned for
+    # (`_kernel_tasks`). The trade-off is start-up CPU against lost
+    # parallelism: every extra Python task pays a fixed start-up before
+    # its UDF runs -- ~0.3 s of worker CPU on a 4-vCPU host, nearly all
+    # of it PySpark's setup_spark_files -> importlib.invalidate_caches()
+    # re-reading the zip directories of ~20 zipimporters (pyspark.zip,
+    # the spark-core jar, the shipped package) -- and a split evaluation
+    # only buys wall time once the work it shares outlasts that. One
+    # task evaluates ~2-4M estimated postings/s, so ~1M postings is the
+    # floor. On that host and a 20-pid index, an OR of 414k estimated
+    # postings ran slower in four tasks than in one and one of 1.5M at
+    # most 11% faster, each for about twice the CPU; one of 2.6M ran in
+    # 3.7 s as three tasks against 4.6 s as one. Queries large enough
+    # to leave the serving route by default (> local_max_postings, 8M)
+    # keep the full min(pids, cores) fan-out.
+    KERNEL_TASK_MIN_POSTINGS = 1 << 20
 
     def _search_local(
         self, prep: dict, k: int, use_blockmax: bool,
@@ -3956,9 +4031,11 @@ class SearchEngine(FeatureOpsMixin):
         time bounds resolve in-task from 't' rows, and match-all pids
         reach the tasks via tiny marker rows -- no per-query metadata
         jobs. Job 1: per-task evaluator (`_topk_runner`) + bounded top-k
-        merge (TakeOrdered) -> k rows
-        on the driver. Job 2 (at the caller's collect): point-lookup
-        gather of display fields -- the k (pid, doc_id) winners as
+        merge (TakeOrdered) -> k rows on the driver; the evaluator runs
+        in as many Python tasks as the estimated postings pay for
+        (`_kernel_tasks`) -- a small query is ONE task with no exchange,
+        a large one fans out by pid up to min(pids, cores). Job 2 (at
+        the caller's collect): point-lookup gather of display fields -- the k (pid, doc_id) winners as
         pushed-down isin predicates over the forward index, exact-joined
         against the broadcast local winner relation. This is miru's
         gatherValues forward-index point read (FullText.java:253-280) in
@@ -4170,7 +4247,9 @@ class SearchEngine(FeatureOpsMixin):
         WikiMiruStressService.java:58-120). Each task groups its rows by
         query and runs the same evaluator as `search` once per query;
         per-query results are identical to sequential `search_collect`
-        calls.
+        calls. The task count is sized by the batch's summed estimated
+        postings (`_kernel_tasks`): a small batch is ONE task with no
+        exchange, a large one hash-partitions by (qid, pid).
 
         Returns {query: [(pid, doc_id, score, url), ...]}.
         """
@@ -4180,6 +4259,7 @@ class SearchEngine(FeatureOpsMixin):
         fallback = {}    # queries with match-all nodes -> individual path
         qterm_rows = []  # (qid, term)
         fetch_all: set = set()
+        est_all = 0      # estimated postings over the batched plans
         out: dict[str, list] = {}
         # the retention watermark clamps EVERY query identically
         # (search_many carries no per-query time range), so the batch
@@ -4217,6 +4297,7 @@ class SearchEngine(FeatureOpsMixin):
                 fallback[q] = None
                 continue
             plans[qid] = self._topk_plan(prep, k, use_blockmax)
+            est_all += self._estimated_postings(prep)
             fetch_all.update(prep["fetch_terms"])
             qterm_rows.extend((qid, t) for t in prep["fetch_terms"])
 
@@ -4289,14 +4370,10 @@ class SearchEngine(FeatureOpsMixin):
             )
             tagged = tagged.unionByName(trows)
 
-        nparts = max(
-            1,
-            min(
-                len(plans) * max(len(self.pid_counts), 1),
-                self.spark.sparkContext.defaultParallelism,
-            ),
+        n_tasks = self._kernel_tasks(
+            est_all, len(plans) * len(self.pid_counts)
         )
-        per = tagged.repartition(nparts, "qid", "pid").mapInPandas(
+        per = _by_task(tagged, n_tasks, "qid", "pid").mapInPandas(
             _topk_runner(
                 plans, self.n_docs, self.pid_counts, shared_spec,
                 self._removed_comp,

@@ -397,10 +397,18 @@ class FeatureOpsMixin:
             .distinct()  # per-pid rows dedupe IN SPARK: the driver
             .collect()   # receives one row per present value, never
         )                # values x pids
+        from .engine import _DenseTerms
+
         present = {r["term"] for r in rows}
         out = list(groups)
         for i in wide:
             out[i] = [t for t in groups[i] if t in present]
+            if (
+                isinstance(groups[i], _DenseTerms)
+                and 2 * len(out[i]) >= len(groups[i])
+            ):
+                # half a whole-field range is still dense in it
+                out[i] = _DenseTerms(out[i])
         return out
 
     # -- gatherFeatures ----------------------------------------------------

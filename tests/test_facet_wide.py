@@ -22,9 +22,11 @@ a `tag` field with ~1400 distinct values:
 
 import collections
 import os
+import re
 import sys
 
 import pytest
+from pyspark.sql import functions as F
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
@@ -468,3 +470,78 @@ def test_unpinned_dictionary_streams_exact(eng_unpinned):
         want_gf.items(), key=lambda vc: (-vc[1], vc[0])
     )[:5]
     assert got_gf == expect
+
+
+def _kernel_plan(df) -> str:
+    return df._jdf.queryExecution().executedPlan().toString()
+
+
+def _range_selects(plan: str) -> bool:
+    return bool(re.search(r"term#\d+ >= ", plan))
+
+
+def test_unpinned_explicit_list_selects_by_isin(spark, idx, eng, monkeypatch):
+    """An unpinned dictionary cannot measure a list's dictionary span
+    without a Spark job, so above FACET_ISIN_MAX only a whole-field
+    enumeration may select by term range. An explicit, sparse value
+    list must select by exact In/InSet -- a range would ship its holes'
+    postings -- with unchanged answers."""
+    e = SearchEngine(spark, idx, max_pinned_terms=0)
+    try:
+        assert e._terms_sorted is None
+        monkeypatch.setattr(e, "FACET_ISIN_MAX", 8)
+        sparse = [f"tag\x1f{t}" for t in ALL_TAGS[::3]]
+        assert len(sparse) > e.FACET_ISIN_MAX
+        df = e.kernel_frame(
+            "w000001", k=0, agg="distincts", facet_terms=sparse
+        )
+        plan = _kernel_plan(df)
+        assert "INSET" in plan or " IN (" in plan, plan
+        assert not _range_selects(plan), plan
+        got = sorted(
+            (sparse[int(r["doc_id"])].split("\x1f", 1)[1], int(r["c"]))
+            for r in df.groupBy("doc_id")
+            .agg(F.sum("score").alias("c"))
+            .collect()
+        )
+        keep = set(ALL_TAGS[::3])
+        assert got == sorted(
+            (t, c) for t, c in _expected_distincts("w000001") if t in keep
+        )
+        assert got
+
+        # a floored enumeration is explicit too: its presence-narrowed
+        # groups reach the pairs kernel by isin, same answer as pinned
+        frames = []
+        kernel_frame = e.kernel_frame
+
+        def spy(*a, **kw):
+            frames.append((kw.get("agg"), kernel_frame(*a, **kw)))
+            return frames[-1][1]
+
+        monkeypatch.setattr(e, "kernel_frame", spy)
+        want = eng.gather_features(
+            ("tag", "stream"), local=False, min_value_df=2
+        )
+        assert e.gather_features(
+            ("tag", "stream"), local=False, min_value_df=2
+        ) == want
+        pairs = [_kernel_plan(f) for agg, f in frames if agg == "pairs"]
+        assert pairs and not any(_range_selects(p) for p in pairs)
+
+        # the whole-field enumeration is dense by construction and
+        # keeps its range selection, also once presence-narrowed when
+        # most of its values are present (every tag, over match-all)
+        whole = e.field_terms("tag")
+        assert e._range_dense(whole)
+        assert _range_selects(_kernel_plan(kernel_frame(
+            "w000001", k=0, agg="distincts", facet_terms=whole
+        )))
+        frames.clear()
+        assert e.gather_features(
+            ("tag", "stream"), local=False, top_n=40
+        ) == eng.gather_features(("tag", "stream"), local=False, top_n=40)
+        pairs = [_kernel_plan(f) for agg, f in frames if agg == "pairs"]
+        assert pairs and all(_range_selects(p) for p in pairs)
+    finally:
+        e.close()

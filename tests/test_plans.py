@@ -7,7 +7,9 @@
 - query-side small joins broadcast instead of shuffling
 """
 
+import contextlib
 import os
+import re
 import sys
 
 import pytest
@@ -31,6 +33,35 @@ def engine(spark, tmp_path_factory):
 
 def _plan(df) -> str:
     return df._jdf.queryExecution().executedPlan().toString()
+
+
+def _assert_one_task(plan: str) -> None:
+    """A kernel op below KERNEL_TASK_MIN_POSTINGS: one Python task behind
+    a coalesce -- no exchange at all."""
+    assert "Exchange" not in plan, plan
+    assert "Coalesce 1" in plan, plan
+
+
+@contextlib.contextmanager
+def _floor_lowered(engine):
+    engine.KERNEL_TASK_MIN_POSTINGS = 1  # instance attr shadows the class
+    try:
+        yield
+    finally:
+        del engine.KERNEL_TASK_MIN_POSTINGS
+
+
+def _assert_pid_exchange(engine, plan: str) -> None:
+    """Fanned out: exactly one exchange, hash-partitioning by pid into
+    min(pids, cores) tasks."""
+    n = min(
+        len(engine.pid_counts),
+        engine.spark.sparkContext.defaultParallelism,
+    )
+    assert n > 1
+    assert plan.count("Exchange") == 1, plan
+    shape = rf"Exchange hashpartitioning\(pid#\d+L, {n}\)"
+    assert re.search(shape, plan), plan
 
 
 def test_term_filter_pushdown(engine):
@@ -139,33 +170,44 @@ def test_agg_kernel_plans_shed_all_blobs(engine):
     assert "MapInPandas" in plan
     assert "null AS tfs_bin" in plan and "null AS dls_bin" in plan
 
-    # waveform ships 't' rows: the union forces a bounded repartition,
-    # still one exchange total and blob-free
-    wdf = engine.kernel_frame(
-        "w000001", k=0, agg="waveform", bucket_us=3600_000_000
-    )
-    wplan = _plan(wdf)
+    # waveform ships 't' rows: the union is laid out per query -- a
+    # small op as ONE exchange-free task, blob-free either way
+    def waveform_plan():
+        return _plan(engine.kernel_frame(
+            "w000001", k=0, agg="waveform", bucket_us=3600_000_000
+        ))
+
+    wplan = waveform_plan()
     assert "BatchEvalPython" not in wplan
     assert "null AS tfs_bin" in wplan
-    assert wplan.count("Exchange") == 1, wplan
+    _assert_one_task(wplan)
 
     # stumptown (waveform + newest-k in one pass) has the same shape:
-    # 't' rows ride along, blobs shed, one exchange, Arrow-batched
-    sdf = engine.kernel_frame(
-        "w000001", k=5, agg="stumptown", bucket_us=3600_000_000
-    )
-    splan = _plan(sdf)
+    # 't' rows ride along, blobs shed, one task, Arrow-batched
+    def stumptown_plan():
+        return _plan(engine.kernel_frame(
+            "w000001", k=5, agg="stumptown", bucket_us=3600_000_000
+        ))
+
+    splan = stumptown_plan()
     assert "BatchEvalPython" not in splan
     assert "null AS tfs_bin" in splan and "null AS dls_bin" in splan
-    assert splan.count("Exchange") == 1, splan
+    _assert_one_task(splan)
+
+    # past the per-task floor both fan out: exactly one pid exchange
+    # into min(pids, cores) tasks
+    with _floor_lowered(engine):
+        _assert_pid_exchange(engine, waveform_plan())
+        _assert_pid_exchange(engine, stumptown_plan())
 
 
 def test_streamed_facet_prefix_pushdown_and_blob_shed(engine):
     """r5 streamed facet mode (facet_prefixes): the facet field's
     composed-term range must reach the parquet scan as a pushed
     StartsWith filter (term-major row groups prune on term min/max),
-    every blob must shed before the exchange, and the plan stays
-    Arrow-batched with no row-Python and ONE exchange."""
+    every blob must shed before the kernel, and the plan stays
+    Arrow-batched with no row-Python: one exchange-free task at the
+    default floor, exactly one pid exchange past it."""
     df = engine.kernel_frame(
         "w000001", k=0, agg="distincts",
         facet_prefixes=["lang\x1f"],
@@ -175,4 +217,9 @@ def test_streamed_facet_prefix_pushdown_and_blob_shed(engine):
     assert "MapInPandas" in plan
     assert "StartsWith" in plan.split("PushedFilters")[1][:400], plan
     assert "null AS tfs_bin" in plan and "null AS dls_bin" in plan
-    assert plan.count("Exchange") == 1, plan
+    _assert_one_task(plan)
+    with _floor_lowered(engine):
+        _assert_pid_exchange(engine, _plan(engine.kernel_frame(
+            "w000001", k=0, agg="distincts",
+            facet_prefixes=["lang\x1f"],
+        )))
